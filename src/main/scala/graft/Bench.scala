@@ -23,7 +23,21 @@ object ExtraConf {
 import ExtraConf._
 
 object Bench {
+  /** The `per_query_ms` key of each query: its qNN name prefix. A
+    * repeated prefix would overwrite a key and silently drop a query
+    * from that line, so it is refused. */
+  def shortKeys(names: Seq[String]): Seq[String] = {
+    val keys = names.map(_.takeWhile(_ != '_'))
+    val dups = keys.diff(keys.distinct).distinct
+    require(dups.isEmpty, s"query name prefixes must be unique: ${dups.mkString(", ")}")
+    keys
+  }
+
   def main(args: Array[String]): Unit = {
+    val shortKey = {
+      val names = SparkEntry.queries.keys.toSeq
+      names.zip(shortKeys(names)).toMap
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
@@ -196,7 +210,8 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"total_min":${r3(totalMin)},"unit":"sec","n_queries":${named.size},"n_failed":${failed.size},"reps":$pass,"sf":"$sfDir"}"""
     }
     // Compact PER-QUERY map (r20 verdict item 8): median milliseconds
-    // under short keys — the qNN prefix, unique across the catalog — so
+    // under short keys — the qNN prefix, unique across the catalog
+    // (`shortKeys` checks it before any query runs) — so
     // the complete 213-query map fits in ~2.6 KB and survives the
     // driver's tail capture (the full summaryLine is ~17 KB and lands
     // truncated, which left PERF_r20 with n_common=0). Printed BETWEEN
@@ -207,7 +222,7 @@ object Bench {
         val v = samples(name)
         val ms = if (failed(name) || v.isEmpty) -1L
           else math.round(median(v) * 1000)
-        s"\"" + name.takeWhile(_ != '_') + "\":" + ms
+        s"\"" + shortKey(name) + "\":" + ms
       }.mkString("{", ",", "}")
       s"""{"metric":"per_query_ms","reps":$pass,"q":$qs}"""
     }

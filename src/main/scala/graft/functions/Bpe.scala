@@ -93,9 +93,11 @@ object Bpe {
     *    `maxDriverVocab = 0` as q148 and the spec's parity tests do):
     *    each round is one vocabulary-grain shuffle (adjacent-pair
     *    candidates → weighted count) plus a single-row argmax fetch;
-    *    stops early when no candidate pair remains. `localCheckpoint`
-    *    every 8 rounds bounds the lineage exactly like
-    *    `Graph.pageRankFixedPoint`.
+    *    stops early when no candidate pair remains. The state is
+    *    `localCheckpoint`ed once and then every 8 rounds, which bounds
+    *    the lineage like `Graph.pageRankFixedPoint`; a merge between
+    *    checkpoints is a projection, and every checkpoint is released
+    *    before the call returns.
     *
     * The two paths are merge-for-merge IDENTICAL (BpeSpec property
     * tests, including frequency ties): same adjacent-occurrence
@@ -111,57 +113,55 @@ object Bpe {
       if (head.length <= maxDriverVocab)
         return learnMergesLocal(head.map(r => (r.getString(0), r.getLong(1))), k)
     }
-    var state = wordFreq
+    // The (w, freq, syms) state is checkpointed once, and again every 8
+    // rounds to bound the lineage (like `Graph.pageRankFixedPoint`).
+    // Between checkpoints a merge is a plain projection: each round's
+    // argmax re-applies at most 7 vocabulary-grain BpeMergeAdjacent
+    // passes over the last checkpoint, which costs less than a per-round
+    // persist, whose fill AQE runs as a query stage (a job) of its own.
+    var ckpt: DataFrame = null
+    def checkpoint(df: DataFrame): DataFrame = {
+      val prev = ckpt
+      ckpt = df.localCheckpoint(true)
+      if (prev != null) graft.Checkpoints.release(prev) // ckpt holds the data now
+      ckpt
+    }
+    var state = checkpoint(wordFreq
       // split(w, '') appends a trailing "" (Java regex split, limit -1):
       // strip it, or phantom (lastChar, "") candidates enter training
       // and — "" being the UTF-8 minimum — win any frequency tie,
       // diverging from the oracle replay and the local fast path
       .select(col("w"), col("freq"),
-        array_remove(split(col("w"), ""), "").as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        array_remove(split(col("w"), ""), "").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var round = 0
     var exhausted = false
-    // the previous round's state: released only AFTER the next round's
-    // argmax has materialized the current state's cache (unpersisting
-    // it eagerly would make every argmax recompute the whole lineage
-    // from the last checkpoint — the persist would never serve a hit)
-    var pending: DataFrame = null
-    while (round < k && !exhausted) {
-      val best = state
-        .select(col("freq"), explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .filter(col("p.l") =!= col("p.r"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      // the collect above scanned `state`, so its cache is now populated
-      // and the previous round's entry can go
-      if (pending != null) { pending.unpersist(blocking = false); pending = null }
-      if (best.isEmpty) exhausted = true
-      else {
-        val l = best(0).getString(0)
-        val r = best(0).getString(1)
-        merges += ((l, r))
-        val prev = state
-        state = state.withColumn("syms",
-          org.apache.spark.sql.graft.shim.column(
-            BpeMergeAdjacent(org.apache.spark.sql.graft.shim.expression(col("syms")), l, r)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if ((round + 1) % 8 == 0) {
-          val cached = state
-          state = state.localCheckpoint(true) // eager: reads prev's cache
-          cached.unpersist(blocking = false) // checkpoint holds the data now
-          prev.unpersist(blocking = false)
-        } else pending = prev
-        round += 1
+    try {
+      while (round < k && !exhausted) {
+        val best = state
+          .select(col("freq"), explode(zip_with(
+            slice(col("syms"), lit(1), size(col("syms")) - 1),
+            slice(col("syms"), lit(2), size(col("syms")) - 1),
+            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+          .filter(col("p.l") =!= col("p.r"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val l = best(0).getString(0)
+          val r = best(0).getString(1)
+          merges += ((l, r))
+          state = state.withColumn("syms",
+            org.apache.spark.sql.graft.shim.column(
+              BpeMergeAdjacent(org.apache.spark.sql.graft.shim.expression(col("syms")), l, r)))
+          round += 1
+          // no checkpoint after the last round: nothing reads it
+          if (round % 8 == 0 && round < k) state = checkpoint(state)
+        }
       }
-    }
-    if (pending != null) pending.unpersist(blocking = false)
-    state.unpersist(blocking = false)
+    } finally if (ckpt != null) graft.Checkpoints.release(ckpt)
     merges.toSeq
   }
 

@@ -271,13 +271,18 @@ case class LongL2Distance(left: Expression, right: Expression)
 /** Fused codebook scan: the argmin candidate INDEX over a small
   * driver-held codebook, one tight loop per row — the FAISS assignment
   * kernel shape (r21). `l2 = false`: key = −(v·cᵢ) (i.e. argmax dot);
-  * `l2 = true`: key = Σ(v−cᵢ)². Strict `<` keeps the FIRST minimal
-  * index, so with codebook rows sorted by ascending id the selection is
-  * exactly the lexicographic (key ASC, id ASC) the r20 struct form and
-  * the oracle's ROW_NUMBER window both implement. Returns the 0-based
-  * index (int); null input or a row whose length differs from the
-  * codebook's dimension → null (the composed forms returned null keys
-  * there too). Why an expression and not composed built-ins: per-row
+  * `l2 = true`: key = Σ(v−cᵢ)². Candidate 0 seeds the minimum and
+  * strict `<` keeps the FIRST minimal index, so with codebook rows
+  * sorted by ascending id the selection is exactly the lexicographic
+  * (key ASC, id ASC) the r20 struct form and the oracle's ROW_NUMBER
+  * window both implement, and the index is always valid (keys are
+  * wrapping int64 sums; were every key Long.MaxValue, candidate 0
+  * wins). Returns the 0-based index (int); null input or a row whose
+  * length differs from the codebook's dimension → null. There the r20
+  * struct form did NOT return null: its keys were null, null sorts
+  * first in struct ordering, so it picked the min-id candidate. No
+  * catalog query reaches that edge (every vector has the codebook's
+  * dimension). Why an expression and not composed built-ins: per-row
   * K-candidate selection via array_min(array(structs)) allocates K
   * structs and compares them through an interpreted ordering, and via
   * packed longs still plans K separate dot kernels + a CreateArray —
@@ -319,7 +324,7 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
     val v = input.asInstanceOf[ArrayData]
     val dims = codebook.head.length
     if (v.numElements() != dims) return null
-    var best = -1
+    var best = 0
     var bestKey = Long.MaxValue
     var c = 0
     while (c < codebook.length) {
@@ -328,7 +333,7 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
       var i = 0
       if (l2) while (i < dims) { val d = v.getLong(i) - cv(i); acc += d * d; i += 1 }
       else { while (i < dims) { acc += v.getLong(i) * cv(i); i += 1 }; acc = -acc }
-      if (acc < bestKey) { bestKey = acc; best = c }
+      if (c == 0 || acc < bestKey) { bestKey = acc; best = c }
       c += 1
     }
     best
@@ -353,14 +358,14 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
         |if ($v.numElements() != $dims) {
         |  ${ev.isNull} = true;
         |} else {
-        |  int $best = -1;
+        |  int $best = 0;
         |  long $bestKey = Long.MAX_VALUE;
         |  for (int $c = 0; $c < ${codebook.length}; $c++) {
         |    final long[] $cv = $cb[$c];
         |    long $acc = 0L;
         |    for (int $i = 0; $i < $dims; $i++) { $inner }
         |    $flip
-        |    if ($acc < $bestKey) { $bestKey = $acc; $best = $c; }
+        |    if ($c == 0 || $acc < $bestKey) { $bestKey = $acc; $best = $c; }
         |  }
         |  ${ev.value} = $best;
         |}

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Cache lifetime: pair-set operators (minhash, hamming, containment,
   * cluster pairs) materialize their PAIR-GRAIN result eagerly via
   * [[materializeSmall]] and free every internal cache (banded
-  * signatures, hot-bucket lists, shingle postings) before returning —
+  * signatures, shingle postings) before returning —
   * no corpus-grain block outlives a call, so a long-lived service can
   * invoke them per-epoch without accumulating cache. The one retained
   * footprint is the result itself when it exceeds the driver bound
@@ -48,13 +48,14 @@ object Dedup {
   val DefaultMaxDfAbs: Int = 1024
 
   /** Materialize a (pair-grain) result with exactly ONE evaluation so
-    * upstream caches can be freed before returning: an eager
-    * localCheckpoint lands the rows as distributed blocks, then a tiny
-    * result (≤ `maxDriverRows`) is collapsed to a LocalRelation and its
-    * checkpoint blocks released — zero retained executor blocks, and
-    * the local rows broadcast into downstream joins for free. A LARGE
-    * result stays as the checkpoint: re-scannable at partition
-    * parallelism with no driver round-trip (an r14.0 lesson — a
+    * upstream caches can be freed before returning: a localCheckpoint
+    * lands the rows as distributed blocks — filled by the one job that
+    * also counts them — then a tiny result (≤ `maxDriverRows`) is
+    * collapsed to a LocalRelation and its checkpoint blocks released —
+    * zero retained executor blocks, and the local rows broadcast into
+    * downstream joins for free. A LARGE result stays as the checkpoint:
+    * re-scannable at partition parallelism with no driver round-trip
+    * and no re-evaluation of the upstream plan (an r14.0 lesson — a
     * LocalRelation of 10⁵⁺ pair rows re-serializes from the driver
     * into every consuming stage, which at sf1 cost more than the joins
     * it fed). Its pair-grain blocks are the one retained footprint,
@@ -62,21 +63,18 @@ object Dedup {
     * [[connectedComponents]]'s `maxDriverEdges`. */
   private[operators] def materializeSmall(
       df: DataFrame, maxDriverRows: Int = 32768): DataFrame = {
-    val ckpt = df.localCheckpoint(true)
-    if (ckpt.count() > maxDriverRows) ckpt
+    // lazy checkpoint: counting the RDD it reads fills the checkpoint
+    // blocks and sizes the result in one job, where an eager
+    // checkpoint needs a second pass over the blocks to count them
+    val ckpt = df.localCheckpoint(false)
+    if (graft.Checkpoints.rdd(ckpt).get.count() > maxDriverRows) ckpt
     else {
       val out = df.sparkSession.createDataFrame(
         java.util.Arrays.asList(ckpt.collect(): _*), df.schema)
       // release exactly the checkpoint blocks the LocalRelation
-      // replaced: the checkpointed frame's plan IS a LogicalRDD over
-      // the persisted RDD, so we unpersist that specific RDD rather
-      // than diffing the global persistent-RDD registry — a concurrent
-      // job persisting its own blocks between our snapshot and diff
-      // (the r15 advice race) can no longer have its cache freed out
-      // from under it
-      ckpt.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
+      // replaced (a concurrent job's cache is never touched — the r15
+      // advice race)
+      graft.Checkpoints.release(ckpt)
       out
     }
   }
@@ -286,7 +284,7 @@ object Dedup {
 
   /** Lazy core of [[cappedBucketPairs]]: the capped candidate-pair PLAN
     * over an internally persisted banded frame, plus a cleanup that
-    * frees both internal caches. Callers that verify candidates
+    * frees that cache. Callers that verify candidates
     * (minhash Jaccard, hamming popcount) weave the plan into their
     * verification join so candidates flow straight into it — the
     * UNVERIFIED pair set is never materialized (at sf1's replica-clique
@@ -306,16 +304,18 @@ object Dedup {
     // detection is ADAPTIVE: one bounded driver action checks whether any
     // hot bucket exists at all, and the no-skew case (overwhelmingly
     // common) runs the plain self-join with zero split overhead.
-    val hot = cached.groupBy(keys.map(col): _*)
+    val hotAgg = cached.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_n"), min(col(idCol)).as("_rep"))
       .filter(col("_n") > cap)
       .select(keys.map(col) :+ col("_rep"): _*)
-      .persist(MEMORY_AND_DISK)
     // NB the probe is an eager job: CONSTRUCTING the plan runs the
     // signature+banding subtree once (into the banded cache) — the
-    // cost buys the adaptive no-skew fast path below.
-    val anyHot = hot.limit(1).count() > 0
-    val pairsPlan = if (!anyHot) {
+    // cost buys the adaptive no-skew fast path below. The hot list is
+    // collected by that same job rather than persisted and probed: it
+    // is broadcast-sized by construction, and as a LocalRelation it
+    // holds no executor blocks.
+    val hotRows = hotAgg.collect()
+    val pairsPlan = if (hotRows.isEmpty) {
       val a = cached.select(keys.map(col) :+ col(idCol).as("id_a"): _*)
       val b = cached.select(keys.map(col) :+ col(idCol).as("id_b"): _*)
       a.join(b, keys)
@@ -323,6 +323,8 @@ object Dedup {
         .select("id_a", "id_b")
         .distinct()
     } else {
+      val hot = cached.sparkSession.createDataFrame(
+        java.util.Arrays.asList(hotRows: _*), hotAgg.schema)
       val cold = cached.join(broadcast(hot.select(keys.map(col): _*)), keys, "left_anti")
       val a = cold.select(keys.map(col) :+ col(idCol).as("id_a"): _*)
       val b = cold.select(keys.map(col) :+ col(idCol).as("id_b"): _*)
@@ -334,7 +336,7 @@ object Dedup {
         .select(col("_rep").as("id_a"), col(idCol).as("id_b")) // _rep is the min ⇒ a < b
       coldPairs.union(hotPairs).distinct()
     }
-    (pairsPlan, () => { cached.unpersist(false); hot.unpersist(false) })
+    (pairsPlan, () => { cached.unpersist(false) })
   }
 
   /** Verified candidate pairs `(id_a, id_b, jaccard)` with id_a < id_b,

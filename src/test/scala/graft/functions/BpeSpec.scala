@@ -173,4 +173,17 @@ class BpeSpec extends SparkSpec {
     assert(viaScan.keySet.diff(viaExplode.keySet)
       .forall(d => viaScan(d) == 0L))
   }
+
+  test("dataflow learnMerges leaves no persisted RDD or cached plan behind") {
+    // the q148 leak: the 8-round localCheckpoints stayed persisted
+    val wf = Bpe.wordFreq(
+      graft.Tables.load(spark, graft.SparkSpec.testdata("0.001"), "documents"), "text")
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // 20 rounds: checkpoints at the start and after rounds 8 and 16
+    assert(Bpe.learnMerges(wf, 20, maxDriverVocab = 0).size == 20)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persistent RDD ids: $leaked")
+    assert(spark.sharedState.cacheManager.isEmpty, "cached plans left behind")
+  }
 }

@@ -75,4 +75,28 @@ class GraftExpressionsSpec extends SparkSpec {
       .selectExpr("graft_nfc(t) AS n").as[String].head()
     assert(viaSql == composed)
   }
+
+  test("CodebookArgmin always returns a valid index, interpreted and codegen'd") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.shim
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // v·c = −Long.MaxValue, so every argmax-dot key is exactly
+    // Long.MaxValue: the seed must be candidate 0, never −1
+    val saturated = Array(Array(-Long.MaxValue), Array(-Long.MaxValue))
+    // ties keep the first index; a dimension mismatch is null
+    val tied = Array(Array(3L, 4L), Array(0L, 0L), Array(3L, 4L))
+    def interpreted(v: Array[Long], cb: Array[Array[Long]], l2: Boolean): Any =
+      CodebookArgmin(Literal.create(v, ArrayType(LongType, false)), cb, l2).eval()
+    assert(interpreted(Array(1L), saturated, l2 = false) == 0)
+    assert(interpreted(Array(3L, 4L), tied, l2 = true) == 0)
+    assert(interpreted(Array(3L, 4L), tied, l2 = false) == 0)
+    assert(interpreted(Array(1L), tied, l2 = true) == null)
+    // a non-foldable input keeps the kernel inside whole-stage codegen
+    def codegen(cb: Array[Array[Long]], l2: Boolean, v: org.apache.spark.sql.Column): Any =
+      spark.range(1).select(shim.column(
+        CodebookArgmin(shim.expression(v), cb, l2))).head().get(0)
+    assert(codegen(saturated, l2 = false, array(col("id") + 1)) == 0)
+    assert(codegen(tied, l2 = true, array(col("id") + 3, col("id") + 4)) == 0)
+    assert(codegen(tied, l2 = true, array(col("id") + 1)) == null)
+  }
 }

@@ -733,4 +733,25 @@ class DedupSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persistent RDD ids: $leaked")
   }
+
+  test("materializeSmall evaluates its input once on both sides of the driver bound") {
+    val evals = spark.sparkContext.longAccumulator
+    val counted = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val df = spark.range(0, 100, 1, 4).select(counted(col("id")).as("id"))
+    // 1000: collapsed to a LocalRelation; 10: kept as the checkpoint
+    for (maxRows <- Seq(1000, 10)) {
+      evals.reset()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (out, jobs) = withJobs(Dedup.materializeSmall(df, maxDriverRows = maxRows))
+      // one job fills and counts the checkpoint; only a small result
+      // takes a second, its collect
+      assert(jobs.size == (if (maxRows == 1000) 2 else 1), jobs.mkString("; "))
+      assert(out.as[Long].collect().sorted.toSeq == (0L until 100L))
+      assert(out.as[Long].collect().length == 100)
+      assert(evals.value == 100L, s"maxDriverRows=$maxRows: ${evals.value} evaluations")
+      val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(retained.size == (if (maxRows == 1000) 0 else 1), s"retained $retained")
+      graft.Checkpoints.release(out)
+    }
+  }
 }
