@@ -1,4 +1,4 @@
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for shuffle/spill experiments (VERDICT r3 item 3):
@@ -27,13 +27,8 @@ object MakeScale {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-make-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build(graft.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")) :+ ("spark.app.name" -> "graft-make-scale"))
     spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: prints the formatted physical plan for the catalog
   * queries whose names start with a SPARK_GRAFT_ONLY prefix (all when
@@ -9,38 +8,21 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // codegen mode: debugCodegen cannot see through an un-executed
-      // AdaptiveSparkPlan wrapper ("Found 0 WholeStageCodegen
-      // subtrees"), so the codegen audit reads the static plan instead
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "formatted") != "codegen").toString)
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // SPARK_GRAFT_EXPLAIN_MODE: formatted (default) | codegen | extended
     // — codegen answers "did this kernel stay inside whole-stage
     // codegen?" (r20 verdict item 7, the dhash family audit)
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "formatted")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain(mode)
-        catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
-      }
+    // codegen mode: debugCodegen cannot see through an un-executed
+    // AdaptiveSparkPlan wrapper ("Found 0 WholeStageCodegen
+    // subtrees"), so the codegen audit reads the static plan instead
+    val spark = Session.build(Session.local("4") :+
+      ("spark.sql.adaptive.enabled" -> (mode != "codegen").toString))
+    spark.sparkContext.setLogLevel("ERROR")
+    SparkEntry.selected.foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      try fn(spark, sfDir).explain(mode)
+      catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+    }
     spark.stop()
   }
 }

@@ -32,6 +32,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allSpecs.map(s => s.name -> s.fn).toMap
 
+  /** The catalog in name order, narrowed to the names that start with a
+    * SPARK_GRAFT_ONLY prefix (comma-separated; a local iteration aid,
+    * unset for full benchmark and correctness runs). */
+  def selected: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (LSH/signature queries) → driver records a rows-only check. */

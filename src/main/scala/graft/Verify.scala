@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reference parity: cast('bad' AS INT) → null, not error (SURVEY §7.4)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val spark = Session.build(Session.local(cpus))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY: comma-separated name prefixes — dump just those
-    // queries (local iteration aid; driver leaves it unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

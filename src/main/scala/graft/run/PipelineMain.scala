@@ -51,22 +51,7 @@ object PipelineMain {
       println(s"[pipeline] gen-topics: wrote $n records/topic to ${args(1)}")
       return
     }
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      // spark-submit injects spark.master; standalone runs fall back local
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val spark = graft.Session.build(graft.Session.deployed("graft-pipeline"))
     args.headOption match {
       case Some("curate") =>
         val Array(_, corpusDir, outDir) = args.take(3)

@@ -1,8 +1,7 @@
 package graft.run
 
-import graft.ExtraConf._
+import graft.{Bench, Session}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage instrumentation harness for the q182 host-bimodality
   * root-cause (VERDICT r19 item 3): four rounds of dedicated sf1
@@ -40,31 +39,12 @@ object ProfiledQuery {
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/target/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_GC", "10min"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", s"${4 * 1024 * 1024}"))
-      .applyExtraConf() // SPARK_GRAFT_CONF A/B overlay (see graft.ExtraConf)
-      .getOrCreate()
+    val spark = Session.build(Session.measured(cpus, "10min"))
     spark.sparkContext.setLogLevel("WARN")
 
     // stage metrics buffer, cleared per rep (single-threaded driver:
-    // the query action completes before the buffer is read, and the
-    // listener bus drains on waitUntilEmpty-equivalent sleep below)
+    // the query action completes, then the listener bus is drained,
+    // before the buffer is read)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -86,11 +66,6 @@ object ProfiledQuery {
       }
     })
 
-    def procGcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     // host CPU accounting from /proc/stat (user/nice/system/idle/iowait/
     // irq/softirq/steal jiffies): the steal delta is the decisive
     // discriminator for a VM host regime — tasks at low cpu/run
@@ -110,54 +85,35 @@ object ProfiledQuery {
       names.zip(d).map { case (n, v) => s""""$n":$v""" }
         .mkString("{", ",", "}")
     }
-    // the Bench sentinel verbatim (pinned zero-I/O generate+agg+sort,
-    // min-of-3 after a warm rep) — stamps the host regime per rep so a
-    // slow wall is separable into "sentinel slow too" (host) vs
-    // "sentinel fine, stages slow" (query-specific term)
-    def sentinelOnce(): Double = {
-      import org.apache.spark.sql.functions.{avg, max, sum}
-      val t0 = System.nanoTime()
-      spark.range(0, 16L * 1000 * 1000, 1, cpus.toInt)
-        .selectExpr("id % 9973 AS k", "id AS v")
-        .groupBy("k").agg(sum("v").as("s"), avg("v").as("a"), max("v").as("m"))
-        .orderBy("k")
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def sentinel(): Double = { sentinelOnce(); (1 to 3).map(_ => sentinelOnce()).min }
-
     val fns = names.map(name => name -> graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name")))
     // warmup at the smallest sf so rep 1 measures the engine, not JIT
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      fns.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      }
-    val sentPre = sentinel()
+    Bench.warmUp(spark, fns.map(_._2), warmDir, sfDir)
+    // the Bench sentinel stamps the host regime per rep, so a slow wall
+    // is separable into "sentinel slow too" (host) vs "sentinel fine,
+    // stages slow" (query-specific term)
+    val sentPre = Bench.sentinel(spark, cpus.toInt)
     for ((name, fn) <- fns; rep <- 1 to reps) {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Bench.teardown(spark)
       stages.clear()
-      val gc0 = procGcMs
+      val gc0 = Bench.gcMs
       val host0 = hostCpu()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      Bench.run(spark, fn, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
       val hostD = hostDeltaJson(host0, hostCpu())
-      Thread.sleep(500) // let the listener bus drain this rep's stages
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val st = stages.asScala.toList
       println(f"""{"profiled":{"q":"$name","rep":$rep,"wall":$wall%.3f,""" +
-        s""""proc_gc_ms":${procGcMs - gc0},"sentinel_pre":$sentPre,""" +
+        s""""proc_gc_ms":${Bench.gcMs - gc0},"sentinel_pre":$sentPre,""" +
         s""""host_jiffies":$hostD,""" +
         s""""n_stages":${st.size},"sf":"$sfDir",""" +
         s""""stages":${st.mkString("[", ",", "]")}}}""")
       System.out.flush()
     }
-    val sentPost = sentinel()
+    val sentPost = Bench.sentinel(spark, cpus.toInt)
     println(s"""{"profiled_sentinel":{"pre":$sentPre,"post":$sentPost}}""")
     System.out.flush()
     spark.stop()

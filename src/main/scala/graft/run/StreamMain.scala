@@ -2,7 +2,6 @@ package graft.run
 
 import graft.pipeline.Schemas
 import graft.streaming.StreamPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Streaming driver — the reference's Kinesis notebook as a `main()`
   * (SURVEY.md §3.3): three concurrent checkpointed queries consume the
@@ -18,13 +17,7 @@ object StreamMain {
   def main(args: Array[String]): Unit = {
     val Array(baseDir, outDir) = args.take(2)
     val once = args.contains("--once")
-    val spark = SparkSession.builder()
-      .appName("graft-stream")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build(graft.Session.deployed("graft-stream"))
 
     val trigger =
       if (once) org.apache.spark.sql.streaming.Trigger.AvailableNow()

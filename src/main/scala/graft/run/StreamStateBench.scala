@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-batch cost of the streaming index twins as the landed corpus
@@ -50,36 +50,7 @@ object StreamStateBench {
     require(nBatches >= 1, s"need nBatches >= 1, got $nBatches")
     require(dupPct >= 0 && dupPct <= 50, s"dupPct must be 0..50, got $dupPct")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // shuffle-state reclamation matching Bench.scala: 50 batches of
-      // multi-join plans in one JVM leak shuffle files until the
-      // ContextCleaner GCs their RDDs (hourly by default — never
-      // within a run); without this the late batches measure
-      // accumulated-state pressure, not the operator
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_GC", "1min"))
-      // split-size floor matching Bench.scala: a freshly compacted
-      // index is ONE ~tens-of-MB dir — at the default 128 MiB
-      // maxPartitionBytes it scans on a single core and every
-      // post-compaction batch serializes its index reads (measured as
-      // a 2x per-batch level shift at each compaction point). At
-      // production scale the default is right (the compacted index is
-      // thousands of 128 MiB splits); this sizes splits to the bench.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", s"${4 * 1024 * 1024}"))
-      .getOrCreate()
+    val spark = graft.Session.build(graft.Session.measured(cpus, "1min"))
     spark.sparkContext.setLogLevel("WARN")
     val root = java.nio.file.Files.createTempDirectory("graft-ssb").toString
     val out = s"$root/out"
@@ -102,14 +73,9 @@ object StreamStateBench {
       spark.range(perBatch).select((col("id") + lit(base)).as("doc_id"),
         concat_ws(" ", toks: _*).as("text"))
     }
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     val rows = (0 until nBatches).map { b =>
       val docs = docsFor(b)
-      val gc0 = gcMs
+      val gc0 = graft.Bench.gcMs
       val t0 = System.nanoTime()
       mode match {
         case "dedup" =>
@@ -166,7 +132,7 @@ object StreamStateBench {
       spark.range(0, 4000000, 1, 8)
         .selectExpr("max(xxhash64(id, id+1, id+2))").collect()
       val cmpMs = (System.nanoTime() - c0) / 1000000
-      (b, sec, dirs, fpp, gcMs - gc0, phases, rdds, classes, heapMb,
+      (b, sec, dirs, fpp, graft.Bench.gcMs - gc0, phases, rdds, classes, heapMb,
         sentMs, cmpMs)
     }
     def mean(xs: Seq[Double]): Double =

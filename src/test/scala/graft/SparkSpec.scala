@@ -44,18 +44,12 @@ object SparkSpec {
   def testdata(sf: String): String = s"/root/testdata/sf$sf"
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
+    // the engine's own confs, so plans are checked as the mains run them
+    val s = Session.build(Session.local("4") ++ Seq(
+      "spark.app.name" -> "graft-tests",
       // janino failures in our doGenCode must fail tests, not silently
       // drop the whole plan to interpreted mode
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.codegen.fallback" -> "false"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
