@@ -160,14 +160,6 @@ object TextFunctions {
     shim.column(OphSignature(shim.expression(shingleHashCol), k))
   }
 
-  /** HOF reference twin of [[minhashSignature]] (string or long
-    * shingles; xxhash64-seeded family) — kept for property
-    * cross-checks; ~100× slower per row than the expression form. */
-  def minhashSignatureHof(shingleCol: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      seed => array_min(transform(shingleCol, s => xxhash64(seed, s))))
-
   /** Band hashes for LSH: split a length-k signature into `bands` bands
     * of k/bands values each and hash each band. Two texts whose
     * signatures agree on any whole band land in the same LSH bucket. */

@@ -926,17 +926,11 @@ object Curation {
     // (even ids < 200 — ingest-bounded) BROADCASTS; the corpus side
     // streams through the dot scan once per consumer, and both k-NN
     // tables are bounded-state TopK aggregates (map-combined), so
-    // nothing corpus-grain is ever sorted or windowed. Quantized
-    // integer dots → the oracle replays every step, margins included. ----
+    // nothing corpus-grain is ever sorted or windowed. ----
     QuerySpec(
       "q208_margin_mining",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), a AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, a AS (
           SELECT vec_id AS id_a, v AS av FROM qz
           WHERE vec_id % 2 = 0 AND vec_id < 200
         ), b AS (
@@ -982,8 +976,7 @@ object Curation {
                 // (s.sumk_a + t.sumk_b) >= 72090"""),
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
+        val quant = Ann.quantizedEmbedding
         graft.operators.Similarity.marginMine(
           emb.filter(col("vec_id") % 2 === 1)
             .select(col("vec_id"), quant.as("qv")), "vec_id",
@@ -998,7 +991,7 @@ object Curation {
     // the sample spans the space instead of following its density
     // (cluster-balanced selection, the DiverseEvol/dataset-pruning
     // staple). Assignment = nearest of the 16 lowest-id centroids
-    // (the q44/q90 untrained choice, quantized dots → replayable);
+    // (the q44/q90 untrained choice);
     // the per-cluster keep is the domainCap TopK aggregate in
     // deterministic hash order — map-side partials hold ≤ cap entries
     // per cluster, so the head cluster of a density-skewed space
@@ -1007,24 +1000,7 @@ object Curation {
     QuerySpec(
       "q209_diversity_sample",
       Some(s"""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 16
-        ), adot AS (
-          SELECT c.vec_id, ct.list_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                   i -> c.v[i] * ct.centv[i])) AS BIGINT) AS d
-          FROM qz c, cents ct
-        ), assigned AS (
-          SELECT vec_id, list_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                        ORDER BY d DESC, list_id) AS r FROM adot)
-          WHERE r = 1
-        )
+        WITH ${AnnOracle.qz()}, ${AnnOracle.cents(16)}, ${AnnOracle.assigned()}
         SELECT list_id, vec_id FROM (
           SELECT list_id, vec_id,
                  ROW_NUMBER() OVER (PARTITION BY list_id
@@ -1033,22 +1009,10 @@ object Curation {
           FROM assigned)
         WHERE pick <= 20"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id"), quant.as("cv"))
-        // literal-codebook assignment (see [[LitCodebook]]): the 16
-        // fixed centroids fold into a per-row argmax projection — same
-        // (d DESC, list_id ASC) selection, no crossJoin/window
-        val centsL = LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(16), "vec_id", "cv")
-        val assigned = corpus
-          .select(
-            LitCodebook.argmaxDot(col("cv"), centsL).getField("id")
-              .as("list_id"),
-            col("vec_id"))
-        graft.operators.CorpusPrep.capByDomain(
-            assigned.withColumnRenamed("list_id", "domain"), "vec_id", 20)
+        val corpus = Ann.quantized(s, dir)
+        val assigned = Ann.assign(corpus, Ann.lowestIds(corpus, 16))
+          .select(col("list_id").as("domain"), col("vec_id"))
+        graft.operators.CorpusPrep.capByDomain(assigned, "vec_id", 20)
           .select(col("domain").as("list_id"), col("vec_id"))
       }),
 
@@ -1066,12 +1030,7 @@ object Curation {
     QuerySpec(
       "q210_ann_ivf_kmeans_quantized_topk",
       Some(s"""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), dims AS (
+        WITH ${AnnOracle.qz()}, dims AS (
           -- dimension DERIVED from the data (r16 advice: a hardcoded 65
           -- bound silently truncated/NULL-padded centroids if the
           -- embedding width ever changed; the Scala trainer derives
@@ -1085,47 +1044,7 @@ object Curation {
           QUALIFY rn <= 256
         ), cents0 AS (
           SELECT vec_id AS list_id, v AS centv FROM samp WHERE rn <= 8
-        ), assign1 AS (
-          SELECT vec_id, v, list_id FROM (
-            SELECT s.vec_id, s.v, ct.list_id,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(s.v)),
-                       i -> s.v[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
-            FROM samp s, cents0 ct) t
-          WHERE r = 1
-        ), cents1 AS (
-          SELECT list_id, list(cv ORDER BY i) AS centv FROM (
-            SELECT a.list_id, i,
-                   CAST(SUM(a.v[i] + 4096) AS BIGINT) // COUNT(*) - 4096 AS cv
-            FROM assign1 a, dims
-            GROUP BY a.list_id, i) t
-          GROUP BY list_id
-        ), assign2 AS (
-          SELECT vec_id, v, list_id FROM (
-            SELECT s.vec_id, s.v, ct.list_id,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(s.v)),
-                       i -> s.v[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
-            FROM samp s, cents1 ct) t
-          WHERE r = 1
-        ), cents2 AS (
-          SELECT list_id, list(cv ORDER BY i) AS centv FROM (
-            SELECT a.list_id, i,
-                   CAST(SUM(a.v[i] + 4096) AS BIGINT) // COUNT(*) - 4096 AS cv
-            FROM assign2 a, dims
-            GROUP BY a.list_id, i) t
-          GROUP BY list_id
-        ), assigned AS (
-          SELECT vec_id, v, list_id FROM (
-            SELECT c.vec_id, c.v, ct.list_id,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                       i -> c.v[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
-            FROM qz c, cents2 ct) t
-          WHERE r = 1
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), probes AS (
+        ), ${AnnOracle.ivfLloyd(2)}, ${AnnOracle.argmaxAssign("assigned", "qz", "c", "cents2")}, ${AnnOracle.q}, probes AS (
           SELECT query_id, qv, list_id FROM (
             SELECT q.query_id, q.qv, ct.list_id,
                    ROW_NUMBER() OVER (PARTITION BY q.query_id
@@ -1133,50 +1052,22 @@ object Curation {
                        i -> q.qv[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
             FROM q, cents2 ct) t
           WHERE r <= 3
-        ), scored AS (
-          SELECT p.query_id, a.vec_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-                   i -> a.v[i] * p.qv[i])) AS BIGINT) AS dot
-          FROM assigned a JOIN probes p ON a.list_id = p.list_id
-          WHERE a.vec_id <> p.query_id
-        )
+        ), ${AnnOracle.scoreProbed}
         SELECT query_id, vec_id, dot, CAST(rank AS BIGINT) AS rank FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                       ORDER BY dot DESC, vec_id) AS rank
           FROM scored)
         WHERE rank <= 5"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        def dot(a: String, b: String) =
-          graft.functions.VectorFunctions.longDot(col(a), col(b))
-        val corpus = emb.select(col("vec_id"), quant.as("cv"))
-        // the trained codebook is k=8 rows — collect it bounded and run
-        // assignment/probing as literal-codebook projections (see
-        // [[LitCodebook]]; same (d DESC, list_id ASC) selection)
-        val centsL = LitCodebook.collect(
+        val corpus = Ann.quantized(s, dir)
+        // the trained codebook is k=8 rows — collected bounded, so
+        // assignment and probing are literal-codebook projections
+        val cents = Ann.codebook(
           graft.operators.Similarity.kmeansCentroidsQuantized(
-            corpus, "vec_id", "cv", k = 8, iters = 2, sampleSize = 256)
-            .select(col("_list").as("list_id"), col("_centroid").as("centv")),
-          "list_id", "centv")
-        val assigned = corpus
-          .withColumn("list_id",
-            LitCodebook.argmaxDot(col("cv"), centsL).getField("id"))
-          .select(col("vec_id"), col("cv"), col("list_id"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("cv").as("qv"))
-        val probes = queries
-          .select(col("query_id"), col("qv"),
-            explode(LitCodebook.topKDot(col("qv"), centsL, 3)).as("p"))
-          .select(col("query_id"), col("qv"), col("p.id").as("list_id"))
-        val wTop = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("dot").desc, col("vec_id"))
-        assigned.join(broadcast(probes), Seq("list_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"), dot("cv", "qv").as("dot"))
-          .withColumn("rank", row_number().over(wTop).cast("long"))
-          .filter(col("rank") <= 5)
+            corpus, "vec_id", "v", k = 8, iters = 2, sampleSize = 256),
+          "_list", "_centroid")
+        val probes = Ann.probe(Ann.queries(corpus), cents, 3)
+        Ann.topK(Ann.scoreProbed(Ann.assign(corpus, cents), probes), "dot", 5)
       }),
 
     // ---- q211: LEAKAGE-SAFE train/test split — the split analogue of

@@ -356,12 +356,12 @@ object Extended {
     // DuckDB list_transform/list_sum mirror hashes identically ----
     QuerySpec(
       "q77_embedding_norm_profile",
-      Some("""
+      Some(s"""
         WITH sq AS (
           SELECT vec_id,
                  CAST(list_sum(list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT) *
-                        CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)))
+                   x -> ${Ann.quantizedX} *
+                        ${Ann.quantizedX}))
                    AS BIGINT) AS sq_norm
           FROM embeddings
         )
@@ -371,9 +371,7 @@ object Extended {
       (s, dir) =>
         graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
           .select(col("vec_id"),
-            expr("""aggregate(
-                      transform(embedding,
-                        x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)),
+            expr(s"""aggregate(transform(embedding, ${Ann.quantize}),
                       CAST(0 AS BIGINT), (acc, e) -> acc + e * e)""").as("sq_norm"))
           .groupBy(expr("sq_norm div 1000000").as("bucket"))
           .agg(count(lit(1)).as("n"),
@@ -709,85 +707,34 @@ object Extended {
           budget = 2048L)
       }),
 
-    // ---- q86: quantized exact search — embeddings int-quantized
-    // (floor(x*1000+0.5), deterministic from the float bits) then
-    // scored by EXACT integer dot product: the int8-style quantization
-    // production vector search uses, and the one ANN-shaped top-k whose
-    // scores a DuckDB oracle can hash bit-for-bit (float cosines
-    // can't). Deliberate brute-force baseline: corpus × 20 queries ----
+    // ---- q86: quantized exact search — the int8-style quantization
+    // production vector search uses, scored by EXACT integer dot (see
+    // [[Ann]]). Deliberate brute-force baseline: corpus × 20 queries ----
     QuerySpec(
       "q86_ann_quantized_exact_topk",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), scored AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.q}, scored AS (
           SELECT q.query_id, c.vec_id,
                  CAST(list_sum(list_transform(generate_series(1, len(c.v)),
                    i -> c.v[i] * q.qv[i])) AS BIGINT) AS dot
           FROM qz c, q
           WHERE c.vec_id <> q.query_id
-        ), ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY dot DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, vec_id, dot, CAST(rank AS BIGINT) AS rank
-        FROM ranked WHERE rank <= 5"""),
+        ), ${AnnOracle.rankedTopK("dot", 5)}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id"), quant.as("cv"))
-        val queries = emb.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), quant.as("qv"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("cv"), col("qv"))
-              .as("dot"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 5)
+        val corpus = Ann.quantized(s, dir)
+        Ann.exactTopK(corpus, Ann.queries(corpus), 5)
       }),
 
     // ---- q90: quantized IVF search — the q86 trick extended from the
     // brute baseline to the IVF TOPOLOGY: coarse-quantize onto 16
     // lowest-id centroid lists (q44's untrained choice), probe the 6
-    // best lists per query, score candidates — every step in integer
-    // arithmetic (floor(x*1000+0.5) quantization, integer dots, id
-    // tiebreaks), so DuckDB replays assignment, probing, and final
-    // top-k bit-for-bit. q44/q49 remain the float/scale path (their
-    // TopKAggregator bounds the exchange); this twin exists to put the
-    // assign→probe→join→rank shape itself under the hash gate ----
+    // best lists per query, score candidates. q44/q49 remain the
+    // float/scale path (their TopKAggregator bounds the exchange); this
+    // twin puts the assign→probe→join→rank shape under the hash gate ----
     QuerySpec(
       "q90_ann_ivf_quantized_topk",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 16
-        ), adot AS (
-          SELECT c.vec_id, c.v, ct.list_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                   i -> c.v[i] * ct.centv[i])) AS BIGINT) AS d
-          FROM qz c, cents ct
-        ), assigned AS (
-          SELECT vec_id, v, list_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                        ORDER BY d DESC, list_id) AS r FROM adot)
-          WHERE r = 1
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), pdot AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.cents(16)}, ${AnnOracle.assigned("v")}, ${AnnOracle.q}, pdot AS (
           SELECT q.query_id, q.qv, ct.list_id,
                  CAST(list_sum(list_transform(generate_series(1, len(q.qv)),
                    i -> q.qv[i] * ct.centv[i])) AS BIGINT) AS d
@@ -797,84 +744,28 @@ object Extended {
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                         ORDER BY d DESC, list_id) AS r FROM pdot)
           WHERE r <= 6
-        ), scored AS (
-          SELECT p.query_id, a.vec_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-                   i -> a.v[i] * p.qv[i])) AS BIGINT) AS dot
-          FROM assigned a JOIN probes p ON a.list_id = p.list_id
-          WHERE a.vec_id <> p.query_id
-        ), ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY dot DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, vec_id, dot, CAST(rank AS BIGINT) AS rank
-        FROM ranked WHERE rank <= 5"""),
+        ), ${AnnOracle.scoreProbed}, ${AnnOracle.rankedTopK("dot", 5)}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        def dot(a: String, b: String) =
-          graft.functions.VectorFunctions.longDot(col(a), col(b))
-        val corpus = emb.select(col("vec_id"), quant.as("cv"))
-        // literal-codebook IVF (see [[LitCodebook]]): assignment is a
-        // per-row argmax projection; the 6-probe selection sorts the 16
-        // literal candidate structs INSIDE the query row (array_sort +
-        // slice + explode) — same (d DESC, list_id ASC) order as the
-        // former windows, zero exchanges for either step
-        val centsL = LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(16), "vec_id", "cv")
-        val assigned = corpus
-          .withColumn("list_id",
-            LitCodebook.argmaxDot(col("cv"), centsL).getField("id"))
-          .select(col("vec_id"), col("cv"), col("list_id"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("cv").as("qv"))
-        val probes = queries
-          .select(col("query_id"), col("qv"),
-            explode(LitCodebook.topKDot(col("qv"), centsL, 6)).as("p"))
-          .select(col("query_id"), col("qv"), col("p.id").as("list_id"))
-        val wTop = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        assigned.join(broadcast(probes), Seq("list_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"), dot("cv", "qv").as("dot"))
-          .withColumn("rank", row_number().over(wTop).cast("long"))
-          .filter(col("rank") <= 5)
+        val corpus = Ann.quantized(s, dir)
+        val cents = Ann.lowestIds(corpus, 16)
+        val probes = Ann.probe(Ann.queries(corpus), cents, 6)
+        Ann.topK(Ann.scoreProbed(Ann.assign(corpus, cents), probes), "dot", 5)
       }),
 
     // ---- q92: quantized embedding near-dup — q40's exact TOPOLOGY
     // (two-band hyperplane signature → band equi-join → cosine-verify →
     // single-hop keeper) in all-integer arithmetic so DuckDB replays
-    // every step (VERDICT r5 item 5). Embeddings int-quantized as in
-    // q86; the "hyperplanes" are a deterministic LCG coefficient grid
-    // coef(p,i) = (1103515245·(p·64+i) + 12345) mod 2¹⁶ − 2¹⁵ computed
-    // identically by both engines (no float planes to drift); band key
-    // b ∈ {0,1} packs the sign bits of planes b·8..b·8+7; verification
-    // is the integer form of cosine ≥ 0.4: dot > 0 ∧ 25·dot² ≥ 4·nа·nb
-    // (0.4² = 4/25 — exact, no float division). Unit-norm embeddings
-    // quantized ×1000 keep every product ≤ ~2.5e13, far inside int64.
-    // q40 stays the float/production path; this twin pins its shape
-    // under the hash gate the way q90 pins IVF's ----
+    // every step (VERDICT r5 item 5). Band key b ∈ {0,1} packs the
+    // sign bits of the LCG planes b·8..b·8+7 ([[Ann.signBits]]);
+    // verification is [[Ann.cosVerified]]. q40 stays the
+    // float/production path; this twin pins its shape under the hash
+    // gate the way q90 pins IVF's ----
     QuerySpec(
       "q92_dedup_embedding_quantized",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), n2 AS (
-          SELECT vec_id, v,
-                 CAST(list_sum(list_transform(v, x -> x*x)) AS BIGINT) AS nn
-          FROM qz
-        ), banded AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.n2}, banded AS (
           SELECT vec_id, b,
-                 CAST(list_sum(list_transform(range(0, 8), j ->
-                   CASE WHEN CAST(list_sum(list_transform(generate_series(1, 64), i ->
-                          v[i] * ((CAST(1103515245 AS BIGINT) * ((b*8 + j)*64 + i - 1)
-                                   + 12345) % 65536 - 32768))) AS BIGINT) >= 0
-                        THEN (1 << j) ELSE 0 END)) AS BIGINT) AS key
+                 ${AnnOracle.signBits(8, "(b*8 + j)")} AS key
           FROM qz, (SELECT unnest(range(0, 2)) AS b)
         ), pairs AS (
           SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
@@ -887,49 +778,21 @@ object Extended {
           FROM pairs p
           JOIN n2 x ON x.vec_id = p.id_a
           JOIN n2 y ON y.vec_id = p.id_b
-        ), verified AS (
-          SELECT id_a, id_b FROM scored
-          WHERE dot > 0 AND 25 * dot * dot >= 4 * na * nb
-        ), best AS (
-          SELECT id_b AS vec_id, MIN(id_a) AS partner_min FROM verified GROUP BY 1
-        )
+        ), ${AnnOracle.verified}
         SELECT e.vec_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) AS keep_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) <> e.vec_id AS is_duplicate
+               ${AnnOracle.keeper}
         FROM embeddings e LEFT JOIN best USING (vec_id)"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        // LCG coefficient grid precomputed as literal arrays: same values
-        // as the former inline transform(sequence(...)) form, but each
-        // plane is one codegen'd longDot instead of 64 interpreted
-        // lambdas per row (the oracle side is unchanged)
-        def coefLit(p: Int) = typedLit((0 until 64).map(i =>
-          (1103515245L * (p * 64 + i) + 12345L) % 65536L - 32768L))
-        def bandKey(b: Int) = (0 until 8).map(j =>
-          when(graft.functions.VectorFunctions.longDot(col("v"), coefLit(b * 8 + j)) >= 0,
-            lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-        val base = emb.select(col("vec_id"), quant.as("v"))
-          .withColumn("nn", graft.functions.VectorFunctions.longDot(col("v"), col("v")))
+        val base = Ann.normed(Ann.quantized(s, dir))
         val banded = base.select(col("vec_id"),
-          posexplode(array(bandKey(0), bandKey(1))))
+          posexplode(array(Ann.signBits(0 until 8), Ann.signBits(8 until 16))))
           .select(col("vec_id"), col("pos").as("b"), col("col").as("key"))
         val pairs = banded.select(col("b"), col("key"), col("vec_id").as("id_a"))
           .join(banded.select(col("b"), col("key"), col("vec_id").as("id_b")),
             Seq("b", "key"))
           .filter(col("id_a") < col("id_b"))
           .select("id_a", "id_b").distinct()
-        val verified = pairs
-          .join(base.select(col("vec_id").as("id_a"), col("v").as("va"),
-            col("nn").as("na")), Seq("id_a"))
-          .join(base.select(col("vec_id").as("id_b"), col("v").as("vb"),
-            col("nn").as("nb")), Seq("id_b"))
-          .withColumn("dot",
-            graft.functions.VectorFunctions.longDot(col("va"), col("vb")))
-          .filter(col("dot") > 0 && expr("25 * dot * dot") >= expr("4 * na * nb"))
-          .select("id_a", "id_b")
-        graft.operators.Dedup.keeperFrom(emb, "vec_id", verified)
+        graft.operators.Dedup.keeperFrom(base, "vec_id", Ann.cosVerified(pairs, base))
       }),
 
     // ---- q153: SemDeDup-style embedding-cluster dedup, quantized twin
@@ -938,84 +801,32 @@ object Extended {
     // production operator is Similarity.semanticDedup (trained float
     // centroids, capped cluster pairs); this twin pins its exact
     // topology under the hash gate the way q90 pins IVF: centroids are
-    // the first-12 pinned seed regime, arithmetic is the q86/q92
-    // integer quantization (assignment argmax by integer dot with
-    // (d DESC, list_id) ties; verify cos ≥ 0.4 as 25·dot² ≥ 4·na·nb),
-    // candidates run through the SAME Dedup.clusterPairs machinery
+    // the first-12 pinned seed regime, candidates run through the SAME
+    // Dedup.clusterPairs machinery
     // (cap ∞ so the oracle's plain self-join is exact at any SF). The
     // assignment itself is part of the output (list_id), so the gate
     // pins clustering, pairing, verification and keeper election. ----
     QuerySpec(
       "q153_semantic_dedup_quantized",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), n2 AS (
-          SELECT vec_id, v,
-                 CAST(list_sum(list_transform(v, x -> x*x)) AS BIGINT) AS nn
-          FROM qz
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 12
-        ), assigned AS (
-          SELECT vec_id, v, nn, list_id FROM (
-            SELECT q.vec_id, q.v, q.nn, c.list_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(q.v)),
-                       i -> q.v[i] * c.centv[i])) AS BIGINT) DESC, c.list_id) AS r
-            FROM n2 q, cents c) t
-          WHERE r = 1
-        ), scored AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.n2}, ${AnnOracle.cents(12)}, ${AnnOracle.normedAssigned}, scored AS (
           SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.nn AS na, b.nn AS nb,
                  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
                    i -> a.v[i] * b.v[i])) AS BIGINT) AS dot
           FROM assigned a JOIN assigned b
             ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-        ), verified AS (
-          SELECT id_a, id_b FROM scored
-          WHERE dot > 0 AND 25 * dot * dot >= 4 * na * nb
-        ), best AS (
-          SELECT id_b AS vec_id, MIN(id_a) AS partner_min FROM verified GROUP BY 1
-        )
+        ), ${AnnOracle.verified}
         SELECT e.vec_id, s.list_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) AS keep_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) <> e.vec_id AS is_duplicate
+               ${AnnOracle.keeper}
         FROM embeddings e
         JOIN assigned s USING (vec_id)
         LEFT JOIN best USING (vec_id)"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        def dotOf(a: String, b: String) =
-          graft.functions.VectorFunctions.longDot(col(a), col(b))
-        val base = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-          .withColumn("nn", graft.functions.VectorFunctions.longDot(col("v"), col("v")))
-        // literal-codebook assignment (see [[LitCodebook]]): 12 fixed
-        // centroids fold into a per-row argmax projection — same
-        // (d DESC, list_id ASC) selection as the former crossJoin +
-        // row_number window, minus the corpus×12 explode, the exchange
-        // and two sorts
-        val centsL = LitCodebook.collect(
-          base.orderBy("vec_id").limit(12), "vec_id", "v")
-        val assigned = base
-          .withColumn("list_id",
-            LitCodebook.argmaxDot(col("v"), centsL).getField("id"))
-          .select(col("vec_id"), col("v"), col("nn"), col("list_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val base = Ann.normed(Ann.quantized(s, dir))
+        val assigned = Ann.assign(base, Ann.lowestIds(base, 12))
         val pairs = graft.operators.Dedup.clusterPairs(
           assigned, "list_id", "vec_id", cap = Int.MaxValue)
-        val verified = pairs
-          .join(assigned.select(col("vec_id").as("id_a"), col("v").as("va"),
-            col("nn").as("na")), Seq("id_a"))
-          .join(assigned.select(col("vec_id").as("id_b"), col("v").as("vb"),
-            col("nn").as("nb")), Seq("id_b"))
-          .withColumn("dot", dotOf("va", "vb"))
-          .filter(col("dot") > 0 && expr("25 * dot * dot") >= expr("4 * na * nb"))
-          .select("id_a", "id_b")
-        graft.operators.Dedup.keeperFrom(emb, "vec_id", verified)
+        graft.operators.Dedup.keeperFrom(base, "vec_id", Ann.cosVerified(pairs, assigned))
           .join(assigned.select(col("vec_id"), col("list_id")), Seq("vec_id"))
           .select(col("vec_id"), col("list_id"), col("keep_id"), col("is_duplicate"))
       }),
@@ -1034,27 +845,8 @@ object Extended {
     // identical embeddings) to O(|cluster|) pairs at 100 TB. ----
     QuerySpec(
       "q160_semantic_dedup_capped",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), n2 AS (
-          SELECT vec_id, v,
-                 CAST(list_sum(list_transform(v, x -> x*x)) AS BIGINT) AS nn
-          FROM qz
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 12
-        ), assigned AS (
-          SELECT vec_id, v, nn, list_id FROM (
-            SELECT q.vec_id, q.v, q.nn, c.list_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(q.v)),
-                       i -> q.v[i] * c.centv[i])) AS BIGINT) DESC, c.list_id) AS r
-            FROM n2 q, cents c) t
-          WHERE r = 1
-        ), csize AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.n2}, ${AnnOracle.cents(12)}, ${AnnOracle.normedAssigned}, csize AS (
           SELECT list_id, COUNT(*) AS n, MIN(vec_id) AS rep
           FROM assigned GROUP BY list_id
         ), cand AS (
@@ -1074,50 +866,23 @@ object Extended {
           FROM cand
           JOIN assigned a ON a.vec_id = cand.id_a
           JOIN assigned b ON b.vec_id = cand.id_b
-        ), verified AS (
-          SELECT id_a, id_b FROM scored
-          WHERE dot > 0 AND 25 * dot * dot >= 4 * na * nb
-        ), best AS (
-          SELECT id_b AS vec_id, MIN(id_a) AS partner_min FROM verified GROUP BY 1
-        )
+        ), ${AnnOracle.verified}
         SELECT e.vec_id, s.list_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) AS keep_id,
-               LEAST(COALESCE(partner_min, e.vec_id), e.vec_id) <> e.vec_id AS is_duplicate,
+               ${AnnOracle.keeper},
                c.n > 40 AS in_hot_cluster
         FROM embeddings e
         JOIN assigned s USING (vec_id)
         JOIN csize c ON c.list_id = s.list_id
         LEFT JOIN best USING (vec_id)"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        def dotOf(a: String, b: String) =
-          graft.functions.VectorFunctions.longDot(col(a), col(b))
-        val base = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-          .withColumn("nn", graft.functions.VectorFunctions.longDot(col("v"), col("v")))
-        // literal-codebook assignment — see q153 / [[LitCodebook]]
-        val centsL = LitCodebook.collect(
-          base.orderBy("vec_id").limit(12), "vec_id", "v")
-        val assigned = base
-          .withColumn("list_id",
-            LitCodebook.argmaxDot(col("v"), centsL).getField("id"))
-          .select(col("vec_id"), col("v"), col("nn"), col("list_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val base = Ann.normed(Ann.quantized(s, dir))
+        val assigned = Ann.assign(base, Ann.lowestIds(base, 12))
         // THE production path: hot clusters (n > 40) emit a star to
         // their min id instead of |cluster|² pairs
         val pairs = graft.operators.Dedup.clusterPairs(
           assigned, "list_id", "vec_id", cap = 40)
-        val verified = pairs
-          .join(assigned.select(col("vec_id").as("id_a"), col("v").as("va"),
-            col("nn").as("na")), Seq("id_a"))
-          .join(assigned.select(col("vec_id").as("id_b"), col("v").as("vb"),
-            col("nn").as("nb")), Seq("id_b"))
-          .withColumn("dot", dotOf("va", "vb"))
-          .filter(col("dot") > 0 && expr("25 * dot * dot") >= expr("4 * na * nb"))
-          .select("id_a", "id_b")
         val sizes = assigned.groupBy(col("list_id")).agg(count(lit(1)).as("_n"))
-        graft.operators.Dedup.keeperFrom(emb, "vec_id", verified)
+        graft.operators.Dedup.keeperFrom(base, "vec_id", Ann.cosVerified(pairs, assigned))
           .join(assigned.select(col("vec_id"), col("list_id")), Seq("vec_id"))
           .join(sizes, Seq("list_id"))
           .select(col("vec_id"), col("list_id"), col("keep_id"),
@@ -1137,19 +902,10 @@ object Extended {
     // twin pins candidate-generation itself under the hash gate ----
     QuerySpec(
       "q93_ann_lsh_quantized_topk",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), sigs AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, sigs AS (
           SELECT vec_id, v,
-                 CAST(list_sum(list_transform(range(0, 16), j ->
-                   CASE WHEN CAST(list_sum(list_transform(generate_series(1, 64), i ->
-                          v[i] * ((CAST(1103515245 AS BIGINT) * (j*64 + i - 1)
-                                   + 12345) % 65536 - 32768))) AS BIGINT) >= 0
-                        THEN (1 << j) ELSE 0 END)) AS BIGINT) AS sig
+                 ${AnnOracle.signBits(16, "j")} AS sig
           FROM qz
         ), cband AS (
           SELECT vec_id, v, sig, c, (sig >> (c*4)) & 15 AS cv
@@ -1168,26 +924,9 @@ object Extended {
                  CAST(list_sum(list_transform(generate_series(1, 64), i ->
                    v[i] * qv[i])) AS BIGINT) AS dot
           FROM cands
-        ), ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY dot DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, vec_id, dot, CAST(rank AS BIGINT) AS rank
-        FROM ranked WHERE rank <= 5"""),
+        ), ${AnnOracle.rankedTopK("dot", 5)}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        // literal LCG plane coefficients + codegen'd longDot per plane
-        // (identical values to the former interpreted HOF form)
-        def coefLit(p: Int) = typedLit((0 until 64).map(i =>
-          (1103515245L * (p * 64 + i) + 12345L) % 65536L - 32768L))
-        val sigExpr = (0 until 16).map(j =>
-          when(graft.functions.VectorFunctions.longDot(col("v"), coefLit(j)) >= 0,
-            lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-        val sigs = emb.select(col("vec_id"), quant.as("v"))
-          .withColumn("sig", sigExpr)
+        val sigs = Ann.quantized(s, dir).withColumn("sig", Ann.signBits(0 until 16))
         def chunks(idCol: String) = sigs.select(
           col("vec_id").as(idCol), col("v"), col("sig"),
           posexplode(array((0 until 4).map(c =>
@@ -1203,13 +942,8 @@ object Extended {
           .filter(col("vec_id") =!= col("query_id"))
           .filter(bit_count(col("sig").bitwiseXOR(col("qsig"))) <= 3)
           .select("query_id", "vec_id", "qv", "v").distinct()
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        cands
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("v"), col("qv")).as("dot"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 5)
+        Ann.topK(cands.select(col("query_id"), col("vec_id"), Ann.dot("v", "qv").as("dot")),
+          "dot", 5)
       }),
 
     // ---- q59: correlated scalar subquery — customers above their
@@ -1927,103 +1661,26 @@ object Extended {
     // lowest-id vectors' subvectors), i.e. the corpus compresses from
     // 64 floats to 4 small ints per vector — the representation that
     // lets a 100 TB embedding store live in cluster RAM. Search is
-    // asymmetric distance computation (ADC): each query precomputes a
-    // (m, code) → partial-dot lookup table (M·Ks = 32 entries,
-    // broadcast), approx dot = Σ_m lut[m][code_m], expressed
-    // relationally as codes ⋈ broadcast LUT + groupBy sum. Encoding
-    // is argmin integer L2 per (vector, subspace) with lowest-code-id
-    // tiebreak — corpus × 32 codebook rows, the q90 assignment shape.
-    // All integer (×1000 quantization, integer dots and distances),
-    // so DuckDB replays encoding, LUTs, and ranking bit-for-bit.
+    // asymmetric distance computation ([[Ann.adcTopK]]) over a
+    // per-query (m, code) → partial-dot table (M·Ks = 32 entries).
     // Composing this with q90's IVF assignment gives IVF-PQ — the two
     // topologies are pinned separately. ----
     QuerySpec(
       "q166_ann_pq_topk",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), cb AS (
-          SELECT vec_id AS cb_id, v FROM qz ORDER BY vec_id LIMIT 8
-        ), ms AS (
-          SELECT unnest(range(4)) AS m
-        ), enc AS (
-          SELECT vec_id, m, code FROM (
-            SELECT c.vec_id, ms.m, s.cb_id AS code,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id, ms.m
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, 16),
-                       i -> (c.v[ms.m*16+i] - s.v[ms.m*16+i])
-                          * (c.v[ms.m*16+i] - s.v[ms.m*16+i]))) AS BIGINT),
-                       s.cb_id) AS r
-            FROM qz c, ms, cb s) t
-          WHERE r = 1
-        ), q AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.encoded}, q AS (
           SELECT vec_id AS query_id, v FROM qz WHERE vec_id < 20
-        ), qlut AS (
-          SELECT q.query_id, ms.m, s.cb_id,
-                 CAST(list_sum(list_transform(generate_series(1, 16),
-                   i -> q.v[ms.m*16+i] * s.v[ms.m*16+i])) AS BIGINT) AS pdot
-          FROM q, ms, cb s
-        ), scored AS (
+        ), ${AnnOracle.qlut("v", "v")}, scored AS (
           SELECT l.query_id, c.vec_id, CAST(SUM(l.pdot) AS BIGINT) AS dot_pq
           FROM enc c JOIN qlut l ON l.m = c.m AND l.cb_id = c.code
           WHERE c.vec_id <> l.query_id
           GROUP BY 1, 2
-        ), ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY dot_pq DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, vec_id, dot_pq, CAST(rank AS BIGINT) AS rank
-        FROM ranked WHERE rank <= 5"""),
+        ), ${AnnOracle.rankedTopK("dot_pq", 5)}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-        // explode each vector into its M=4 subvectors (16 dims each)
-        def subspaces(vCol: String) = explode(array((0 until 4).map { m =>
-          struct(lit(m).as("m"), expr(s"slice($vCol, ${m * 16 + 1}, 16)").as("sv"))
-        }: _*)).as("s")
-        // literal sub-quantizer codebooks (see [[LitCodebook]]): the 8
-        // lowest-id vectors collect bounded and the per-(vector,
-        // subspace) argmin L2 encode folds into the scan — same
-        // (dist ASC, cb_id ASC) selection as the former broadcast join
-        // + row_number window, minus the corpus×8 explode, exchange and
-        // two sorts
-        val cb = LitCodebook.subCodebooks(LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(8), "vec_id", "v"), 4, 16)
-        val codes = corpus
-          .select(col("vec_id"), subspaces("v"))
-          .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-          .withColumn("code", LitCodebook.perSubspace(col("m"),
-            (0 until 4).map(m =>
-              m -> LitCodebook.argminL2(col("sv"), cb(m)).getField("id"))))
-          .select(col("vec_id"), col("m"), col("code"))
-        // per-query ADC lookup tables: (query, m, code) -> partial dot;
-        // the codebook joins as a 32-row LocalRelation
-        val cbDf = {
-          import s.implicits._
-          (0 until 4).flatMap(m => cb(m).map { case (id, cv) => (m, id, cv) })
-            .toDF("m", "cb_id", "centv")
-        }
-        val qlut = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), subspaces("v"))
-          .select(col("query_id"), col("s.m").as("m"), col("s.sv").as("qsv"))
-          .join(broadcast(cbDf), Seq("m"))
-          .select(col("query_id"), col("m"), col("cb_id"),
-            graft.functions.VectorFunctions.longDot(col("qsv"), col("centv")).as("pdot"))
-        val wTop = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_pq").desc, col("vec_id"))
-        codes
-          .join(broadcast(qlut), codes("m") === qlut("m") && codes("code") === qlut("cb_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pdot")).as("dot_pq"))
-          .withColumn("rank", row_number().over(wTop).cast("long"))
-          .filter(col("rank") <= 5)
+        val corpus = Ann.quantized(s, dir)
+        val cb = Ann.subCodebooks(Ann.lowestIds(corpus, 8))
+        Ann.adcTopK(Ann.encode(Ann.subspaces(corpus, "v", "vec_id"), cb),
+          Ann.lut(Ann.queries(corpus), cb), 5)
       }),
 
     // ---- q167: IVF-PQ — the composition q90 (IVF) and q166 (PQ) pin
@@ -2038,19 +1695,11 @@ object Extended {
     // out of the broadcast LUT join, so the per-candidate work is M
     // integer lookups against a 4-small-ints-per-vector compressed
     // corpus. Codebooks are the 8 lowest-id vectors' residual
-    // subvectors (the untrained q90/q166 convention). All integer,
-    // bit-replayed by the oracle end to end. ----
+    // subvectors (the untrained q90/q166 convention). ----
     QuerySpec(
       "q167_ann_ivfpq_topk",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 16
-        ), assigned AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.cents(16)}, assigned AS (
           SELECT vec_id, list_id,
                  list_transform(generate_series(1, 64),
                    i -> v[i] - centv[i]) AS rv
@@ -2061,9 +1710,7 @@ object Extended {
                        i -> c.v[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
             FROM qz c, cents ct) t
           WHERE r = 1
-        ), ms AS (
-          SELECT unnest(range(4)) AS m
-        ), cb AS (
+        ), ${AnnOracle.ms}, cb AS (
           SELECT vec_id AS cb_id, rv FROM assigned ORDER BY vec_id LIMIT 8
         ), enc AS (
           SELECT vec_id, list_id, m, code FROM (
@@ -2075,9 +1722,7 @@ object Extended {
                        s.cb_id) AS r
             FROM assigned a, ms, cb s) t
           WHERE r = 1
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), probes AS (
+        ), ${AnnOracle.q}, probes AS (
           SELECT query_id, qv, list_id, d AS qcdot FROM (
             SELECT q.query_id, q.qv, ct.list_id,
                    CAST(list_sum(list_transform(generate_series(1, 64),
@@ -2087,12 +1732,7 @@ object Extended {
                        i -> q.qv[i] * ct.centv[i])) AS BIGINT) DESC, ct.list_id) AS r
             FROM q, cents ct) t
           WHERE r <= 6
-        ), qlut AS (
-          SELECT q.query_id, ms.m, s.cb_id,
-                 CAST(list_sum(list_transform(generate_series(1, 16),
-                   i -> q.qv[ms.m*16+i] * s.rv[ms.m*16+i])) AS BIGINT) AS pdot
-          FROM q, ms, cb s
-        ), scored AS (
+        ), ${AnnOracle.qlut("qv", "rv")}, scored AS (
           SELECT p.query_id, e.vec_id,
                  MAX(p.qcdot) + CAST(SUM(l.pdot) AS BIGINT) AS dot_ivfpq
           FROM enc e
@@ -2100,81 +1740,34 @@ object Extended {
           JOIN qlut l ON l.query_id = p.query_id AND l.m = e.m AND l.cb_id = e.code
           WHERE e.vec_id <> p.query_id
           GROUP BY p.query_id, e.vec_id
-        ), ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY dot_ivfpq DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, vec_id, dot_ivfpq, CAST(rank AS BIGINT) AS rank
-        FROM ranked WHERE rank <= 5"""),
+        ), ${AnnOracle.rankedTopK("dot_ivfpq", 5)}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        def dotOf(a: String, b: String) =
-          graft.functions.VectorFunctions.longDot(col(a), col(b))
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-        // literal coarse codebook (see [[LitCodebook]]): assignment —
-        // keeping the RESIDUAL v − centroid, the winning centroid rides
-        // the argmax struct — and the 6-probe selection both fold into
-        // projections; the residual sub-quantizer codebooks derive
-        // DRIVER-SIDE from the same 16 collected rows (the 8 lowest ids
-        // are among the 16 lowest, and the local argmax twin runs the
-        // identical Long arithmetic), so the former corpus-grain
-        // assigned persist + two argmin windows disappear outright
-        val centsL = LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(16), "vec_id", "v")
-        val assigned = corpus
-          .withColumn("_a", LitCodebook.argmaxDotCentv(col("v"), centsL))
-          .select(col("vec_id"), col("_a.id").as("list_id"),
-            expr("zip_with(v, _a.centv, (a, b) -> a - b)").as("rv"))
-        def subspaces(vCol: String) = explode(array((0 until 4).map { m =>
-          struct(lit(m).as("m"), expr(s"slice($vCol, ${m * 16 + 1}, 16)").as("sv"))
-        }: _*)).as("s")
-        // residual codebooks: the 8 lowest-id vectors' residual subvectors
-        val cbResid = LitCodebook.subCodebooks(
-          centsL.take(8).map { case (id, v) =>
-            val (_, cv) = LitCodebook.argmaxDotLocal(v, centsL)
-            id -> v.zip(cv).map { case (a, b) => a - b }
-          }, 4, 16)
-        val codes = assigned
-          .select(col("vec_id"), col("list_id"), subspaces("rv"))
-          .select(col("vec_id"), col("list_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-          .withColumn("code", LitCodebook.perSubspace(col("m"),
-            (0 until 4).map(m =>
-              m -> LitCodebook.argminL2(col("sv"), cbResid(m)).getField("id"))))
-          .select(col("vec_id"), col("list_id"), col("m"), col("code"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val probes = queries
-          .select(col("query_id"), col("qv"),
-            explode(LitCodebook.topKDot(col("qv"), centsL, 6)).as("p"))
-          .select(col("query_id"), col("qv"), col("p.id").as("list_id"),
-            (-col("p.nd")).as("qcdot"))
-        val cbResidDf = {
-          import s.implicits._
-          (0 until 4).flatMap(m => cbResid(m).map { case (id, cv) => (m, id, cv) })
-            .toDF("m", "cb_id", "centv")
-        }
-        val qlut = queries
-          .select(col("query_id"), subspaces("qv"))
-          .select(col("query_id"), col("s.m").as("m"), col("s.sv").as("qsv"))
-          .join(broadcast(cbResidDf), Seq("m"))
-          .select(col("query_id").as("lq"), col("m"), col("cb_id"),
-            graft.functions.VectorFunctions.longDot(col("qsv"), col("centv")).as("pdot"))
-        val wTop = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_ivfpq").desc, col("vec_id"))
-        codes
-          .join(broadcast(probes.select(col("query_id"), col("list_id"), col("qcdot"))),
-            Seq("list_id"))
+        val corpus = Ann.quantized(s, dir)
+        // the residual sub-quantizer codebooks derive DRIVER-SIDE from
+        // the same 16 collected rows (the 8 lowest ids are among the 16
+        // lowest, and the local argmax twin runs the kernel's Long
+        // arithmetic), so no corpus-grain assigned frame is persisted
+        // or collected
+        val cents = Ann.lowestIds(corpus, 16)
+        val cbResid = Ann.subCodebooks(cents.take(8).map { case (id, v) =>
+          val (_, cv) = Ann.argmaxDotLocal(v, cents)
+          id -> v.zip(cv).map { case (a, b) => a - b }
+        })
+        val codes = Ann.encode(Ann.subspaces(
+          Ann.assignResidual(corpus, cents), "rv", "vec_id", "list_id"), cbResid)
+        val queries = Ann.queries(corpus)
+        val probes = Ann.probe(queries, cents, 6)
+          .select(col("query_id"), col("list_id"), col("qcdot"))
+        val qlut = Ann.lut(queries, cbResid).withColumnRenamed("query_id", "lq")
+        // dot(q, x) ≈ dot(q, c_list) + Σ_m lut_q[m][code_m]
+        Ann.topK(codes
+          .join(broadcast(probes), Seq("list_id"))
           .join(broadcast(qlut),
             col("lq") === col("query_id") && qlut("m") === codes("m") &&
               qlut("cb_id") === codes("code"))
           .filter(col("vec_id") =!= col("query_id"))
           .groupBy(col("query_id"), col("vec_id"))
-          .agg((max(col("qcdot")) + sum(col("pdot"))).as("dot_ivfpq"))
-          .withColumn("rank", row_number().over(wTop).cast("long"))
-          .filter(col("rank") <= 5)
+          .agg((max(col("qcdot")) + sum(col("pdot"))).as("dot_ivfpq")), "dot_ivfpq", 5)
       }),
 
     // ---- q168: contrastive triplet mining — the (anchor, positive,
@@ -2182,9 +1775,7 @@ object Extended {
     // class) runs over a labeled embedding store: positive = the
     // same-label vector with the highest dot (≠ self), hard negative =
     // the DIFFERENT-label vector with the highest dot (the near-miss
-    // that actually teaches the margin). Quantized integer dots
-    // (q86 kernel) with vec_id tiebreaks, so the oracle replays both
-    // argmaxes exactly. Scale shape: positives are a LABEL-KEYED
+    // that actually teaches the margin). Scale shape: positives are a LABEL-KEYED
     // equi-join (co-partitioned, no broadcast of the corpus); hard
     // negatives scan the corpus against the bounded broadcast anchor
     // set (the q86 pattern, allowlisted) — at production scale the
@@ -2192,13 +1783,8 @@ object Extended {
     // brute force, same downstream argmax. ----
     QuerySpec(
       "q168_contrastive_triplets",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id, label,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), anchors AS (
+      Some(s"""
+        WITH ${AnnOracle.qz("label")}, anchors AS (
           SELECT vec_id AS anchor_id, label AS alabel, v AS av
           FROM qz WHERE vec_id < 40
         ), pos AS (
@@ -2227,15 +1813,11 @@ object Extended {
         SELECT anchor_id, pos_id, pos_dot, neg_id, neg_dot
         FROM pos JOIN neg USING (anchor_id)"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"),
-          col("label"), quant.as("v"))
+        val corpus = Ann.quantized(s, dir, "label")
         val anchors = corpus.filter(col("vec_id") < 40)
           .select(col("vec_id").as("anchor_id"), col("label").as("alabel"),
             col("v").as("av"))
-        def dotAV = graft.functions.VectorFunctions.longDot(col("v"), col("av"))
+        def dotAV = Ann.dot("v", "av")
         val wA = Window.partitionBy(col("anchor_id"))
           .orderBy(col("dot").desc, col("vec_id"))
         // positives: label-keyed equi-join — co-partitioned at scale
@@ -2266,210 +1848,34 @@ object Extended {
     // LEFT join of the exact top-5 onto the PQ top-5 + a per-query
     // count, recall in the catalog's 16-bit fixed point. Exact
     // brute-force side is the deliberate q86 BNLJ baseline
-    // (allowlisted); everything is integer, so the oracle replays the
-    // measured recall bit-for-bit. ----
+    // (allowlisted). ----
     QuerySpec(
       "q172_ann_recall_eval",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), exact AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, c.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                       i -> c.v[i] * q.qv[i])) AS BIGINT) DESC, c.vec_id) AS rank
-            FROM qz c, q
-            WHERE c.vec_id <> q.query_id) t
-          WHERE rank <= 5
-        ), cb AS (
-          SELECT vec_id AS cb_id, v FROM qz ORDER BY vec_id LIMIT 8
-        ), ms AS (
-          SELECT unnest(range(4)) AS m
-        ), enc AS (
-          SELECT vec_id, m, code FROM (
-            SELECT c.vec_id, ms.m, s.cb_id AS code,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id, ms.m
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, 16),
-                       i -> (c.v[ms.m*16+i] - s.v[ms.m*16+i])
-                          * (c.v[ms.m*16+i] - s.v[ms.m*16+i]))) AS BIGINT),
-                       s.cb_id) AS r
-            FROM qz c, ms, cb s) t
-          WHERE r = 1
-        ), qlut AS (
-          SELECT q.query_id, ms.m, s.cb_id,
-                 CAST(list_sum(list_transform(generate_series(1, 16),
-                   i -> q.qv[ms.m*16+i] * s.v[ms.m*16+i])) AS BIGINT) AS pdot
-          FROM q, ms, cb s
-        ), pq AS (
-          SELECT query_id, vec_id FROM (
-            SELECT t.query_id, t.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY t.query_id
-                     ORDER BY t.dot_pq DESC, t.vec_id) AS rank
-            FROM (
-              SELECT l.query_id, c.vec_id, CAST(SUM(l.pdot) AS BIGINT) AS dot_pq
-              FROM enc c JOIN qlut l ON l.m = c.m AND l.cb_id = c.code
-              WHERE c.vec_id <> l.query_id
-              GROUP BY 1, 2) t) r
-          WHERE rank <= 5
-        )
-        SELECT exact.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN pq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_hit,
-               CAST(SUM(CASE WHEN pq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) * 65536 // COUNT(*) AS recall_fp
-        FROM exact LEFT JOIN pq
-          ON pq.query_id = exact.query_id AND pq.vec_id = exact.vec_id
-        GROUP BY exact.query_id"""),
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.q}, ${AnnOracle.exact}, ${AnnOracle.encoded}, ${AnnOracle.qlut("qv", "v")}, ${AnnOracle.pq}
+        ${AnnOracle.recall("pq")}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        // exact top-5: the q86 brute baseline
-        val wEx = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        val exact = corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("v"), col("qv")).as("dot"))
-          .withColumn("rank", row_number().over(wEx)).filter(col("rank") <= 5)
-          .select(col("query_id"), col("vec_id"))
-        // PQ top-5: the q166 codes + ADC pipeline — literal
-        // sub-quantizer codebooks as in q166 (see [[LitCodebook]])
-        def subspaces(vCol: String) = explode(array((0 until 4).map { m =>
-          struct(lit(m).as("m"), expr(s"slice($vCol, ${m * 16 + 1}, 16)").as("sv"))
-        }: _*)).as("s")
-        val cb = LitCodebook.subCodebooks(LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(8), "vec_id", "v"), 4, 16)
-        val codes = corpus
-          .select(col("vec_id"), subspaces("v"))
-          .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-          .withColumn("code", LitCodebook.perSubspace(col("m"),
-            (0 until 4).map(m =>
-              m -> LitCodebook.argminL2(col("sv"), cb(m)).getField("id"))))
-          .select(col("vec_id"), col("m"), col("code"))
-        val cbDf = {
-          import s.implicits._
-          (0 until 4).flatMap(m => cb(m).map { case (id, cv) => (m, id, cv) })
-            .toDF("m", "cb_id", "centv")
-        }
-        val qlut = queries
-          .select(col("query_id"), subspaces("qv"))
-          .select(col("query_id"), col("s.m").as("m"), col("s.sv").as("qsv"))
-          .join(broadcast(cbDf), Seq("m"))
-          .select(col("query_id"), col("m"), col("cb_id"),
-            graft.functions.VectorFunctions.longDot(col("qsv"), col("centv")).as("pdot"))
-        val wPq = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_pq").desc, col("vec_id"))
-        val pq = codes
-          .join(broadcast(qlut), codes("m") === qlut("m") && codes("code") === qlut("cb_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pdot")).as("dot_pq"))
-          .withColumn("rank", row_number().over(wPq)).filter(col("rank") <= 5)
-          .select(col("query_id").as("pq_qid"), col("vec_id").as("pq_vid"))
-        exact
-          .join(pq, col("pq_qid") === col("query_id") && col("pq_vid") === col("vec_id"),
-            "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(when(col("pq_vid").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-          .withColumn("recall_fp", expr("(n_hit * 65536) div n_exact"))
+        val corpus = Ann.quantized(s, dir)
+        val queries = Ann.queries(corpus)
+        val cb = Ann.subCodebooks(Ann.lowestIds(corpus, 8))
+        val pq = Ann.adcTopK(Ann.encode(Ann.subspaces(corpus, "v", "vec_id"), cb),
+          Ann.lut(queries, cb), 5)
+        Ann.recall(Ann.exactTopK(corpus, queries, 5), pq)
       }),
 
     // ---- q173: TRAINED PQ codebooks + recall — closing the arc q172
     // opens: the untrained lowest-id codebooks measure 0.16 recall on
-    // this corpus, so train them. Two Lloyd iterations of k-means PER
-    // SUBSPACE in EXACT INTEGER arithmetic: assignment is integer-L2
-    // argmin with code-id tiebreak; the centroid update is a per-dim
-    // floor mean computed as (Σ(x+4096) // n) − 4096 — the +4096 shift
-    // keeps every numerator non-negative, so truncating and flooring
-    // division agree and both engines produce the identical centroid,
-    // dim for dim (empty clusters keep their previous centroid).
-    // Then encode, ADC, and measure recall@5 against the exact
+    // this corpus, so train them: two integer Lloyd iterations PER
+    // SUBSPACE ([[Ann.trainPQ]]), both engines producing the identical
+    // centroid, dim for dim. Then encode, ADC, and measure recall@5 against the exact
     // baseline exactly as q172 does. Same output shape as q172, so
     // the two rows-per-query tables read as the before/after of
     // training. The whole pipeline — training included — is
     // oracle-replayed bit-for-bit. ----
     QuerySpec(
       "q173_ann_pq_trained_recall",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), exact AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, c.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                       i -> c.v[i] * q.qv[i])) AS BIGINT) DESC, c.vec_id) AS rank
-            FROM qz c, q
-            WHERE c.vec_id <> q.query_id) t
-          WHERE rank <= 5
-        ), ms AS (
-          SELECT unnest(range(4)) AS m
-        ), cents0 AS (
-          SELECT m, cb_id, list(cv ORDER BY i) AS centv FROM (
-            SELECT ms.m, c.vec_id AS cb_id, i, c.v[ms.m*16+i] AS cv
-            FROM (SELECT vec_id, v FROM qz ORDER BY vec_id LIMIT 8) c,
-                 ms, UNNEST(range(1, 17)) AS ti(i)) t
-          GROUP BY m, cb_id
-        ), assign1 AS (
-          SELECT vec_id, m, cb_id, v FROM (
-            SELECT c.vec_id, s.m, s.cb_id, c.v,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id, s.m
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, 16),
-                       i -> (c.v[s.m*16+i] - s.centv[i])
-                          * (c.v[s.m*16+i] - s.centv[i]))) AS BIGINT),
-                       s.cb_id) AS r
-            FROM qz c, cents0 s) t
-          WHERE r = 1
-        ), upd1 AS (
-          SELECT m, cb_id, list(cv ORDER BY i) AS centv FROM (
-            SELECT a.m, a.cb_id, i,
-                   CAST(SUM(a.v[a.m*16+i] + 4096) AS BIGINT) // COUNT(*) - 4096 AS cv
-            FROM assign1 a, UNNEST(range(1, 17)) AS ti(i)
-            GROUP BY a.m, a.cb_id, i) t
-          GROUP BY m, cb_id
-        ), cents1 AS (
-          SELECT c0.m, c0.cb_id, COALESCE(u.centv, c0.centv) AS centv
-          FROM cents0 c0 LEFT JOIN upd1 u
-            ON u.m = c0.m AND u.cb_id = c0.cb_id
-        ), assign2 AS (
-          SELECT vec_id, m, cb_id, v FROM (
-            SELECT c.vec_id, s.m, s.cb_id, c.v,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id, s.m
-                     ORDER BY CAST(list_sum(list_transform(generate_series(1, 16),
-                       i -> (c.v[s.m*16+i] - s.centv[i])
-                          * (c.v[s.m*16+i] - s.centv[i]))) AS BIGINT),
-                       s.cb_id) AS r
-            FROM qz c, cents1 s) t
-          WHERE r = 1
-        ), upd2 AS (
-          SELECT m, cb_id, list(cv ORDER BY i) AS centv FROM (
-            SELECT a.m, a.cb_id, i,
-                   CAST(SUM(a.v[a.m*16+i] + 4096) AS BIGINT) // COUNT(*) - 4096 AS cv
-            FROM assign2 a, UNNEST(range(1, 17)) AS ti(i)
-            GROUP BY a.m, a.cb_id, i) t
-          GROUP BY m, cb_id
-        ), cents2 AS (
-          SELECT c1.m, c1.cb_id, COALESCE(u.centv, c1.centv) AS centv
-          FROM cents1 c1 LEFT JOIN upd2 u
-            ON u.m = c1.m AND u.cb_id = c1.cb_id
-        ), enc AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.q}, ${AnnOracle.exact}, ${AnnOracle.ms}, ${AnnOracle.trainedPQ(8, 2)}, enc AS (
           SELECT vec_id, m, code FROM (
             SELECT c.vec_id, s.m, s.cb_id AS code,
                    ROW_NUMBER() OVER (PARTITION BY c.vec_id, s.m
@@ -2484,256 +1890,35 @@ object Extended {
                  CAST(list_sum(list_transform(generate_series(1, 16),
                    i -> q.qv[s.m*16+i] * s.centv[i])) AS BIGINT) AS pdot
           FROM q, cents2 s
-        ), pq AS (
-          SELECT query_id, vec_id FROM (
-            SELECT t.query_id, t.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY t.query_id
-                     ORDER BY t.dot_pq DESC, t.vec_id) AS rank
-            FROM (
-              SELECT l.query_id, c.vec_id, CAST(SUM(l.pdot) AS BIGINT) AS dot_pq
-              FROM enc c JOIN qlut l ON l.m = c.m AND l.cb_id = c.code
-              WHERE c.vec_id <> l.query_id
-              GROUP BY 1, 2) t) r
-          WHERE rank <= 5
-        )
-        SELECT exact.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN pq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_hit,
-               CAST(SUM(CASE WHEN pq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) * 65536 // COUNT(*) AS recall_fp
-        FROM exact LEFT JOIN pq
-          ON pq.query_id = exact.query_id AND pq.vec_id = exact.vec_id
-        GROUP BY exact.query_id"""),
+        ), ${AnnOracle.pq}
+        ${AnnOracle.recall("pq")}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        def subspaces(vCol: String) = explode(array((0 until 4).map { m =>
-          struct(lit(m).as("m"), expr(s"slice($vCol, ${m * 16 + 1}, 16)").as("sv"))
-        }: _*)).as("s")
-        val sub = corpus.select(col("vec_id"), subspaces("v"))
-          .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-        // Codebooks live DRIVER-SIDE between Lloyd rounds (r20 guide
-        // §2.4 — remove shuffles outright): a PQ codebook is 4×8
-        // centroids of 16 ints at ANY corpus size, so assignment
-        // becomes a pure projection (argmin over 8 literal centroids,
-        // folded into the row — no broadcast join, no per-round
-        // corpus×8 candidate explode, no argmin window with its
-        // exchange + two sorts), and each Lloyd update is one
-        // map-side-combined 128-group aggregate whose result is
-        // collected back (bounded: 8×16 longs per subspace — the
-        // [[graft.operators.Similarity]] driver-side-Lloyd /
-        // broadcast-LUT ADC regime, and how FAISS itself trains).
-        // Selection semantics are the window form's (dist ASC, cb_id
-        // ASC) argmin verbatim: candidates carry (dist, cb_id) structs
-        // and array_min picks the least — bit-identical assignments,
-        // centroids, codes and recall (the DuckDB oracle replays every
-        // round unchanged).
-        // cents: per subspace m, (cb_id → centroid) sorted by cb_id.
-        type Cents = Map[Int, Seq[(Long, Seq[Long])]]
-        def assignExpr(cents: Cents): org.apache.spark.sql.Column = {
-          // per subspace: packed-primitive argmin over the literal
-          // candidates (see [[LitCodebook.argminL2]] — same (dist ASC,
-          // cb_id ASC) selection, no per-row structs)
-          val perM = (0 until 4).map { m =>
-            (m, LitCodebook.argminL2(col("sv"), cents(m)).getField("id"))
-          }
-          perM.tail.foldLeft(when(col("m") === perM.head._1, perM.head._2)) {
-            case (acc, (m, e)) => acc.when(col("m") === m, e)
-          }
-        }
-        def assignTo(cents: Cents): org.apache.spark.sql.DataFrame =
-          sub.withColumn("cb_id", assignExpr(cents))
-        // integer Lloyd update: per-dim floor mean via the +4096 shift
-        // (truncating div == floor on non-negative numerators), empty
-        // clusters keep their previous centroid. One job per round:
-        // a 4·8·16-group aggregate, collected bounded.
-        def update(cents: Cents): Cents = {
-          val upd = assignTo(cents)
-            .select(col("m"), col("cb_id"), posexplode(col("sv")))
-            .groupBy(col("m"), col("cb_id"), col("pos"))
-            .agg(expr("sum(col + 4096) div count(1) - 4096").as("cv"))
-            .collect()
-            .groupBy(r => (r.getInt(0), r.getLong(1)))
-            .map { case ((m, cb), rows) =>
-              (m, cb) -> rows.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq }
-          cents.map { case (m, cbs) =>
-            m -> cbs.map { case (cb, cv) =>
-              cb -> upd.getOrElse((m, cb), cv) }
-          }
-        }
-        val cents0: Cents = corpus.orderBy("vec_id").limit(8)
-          .select(col("vec_id").as("cb_id"), subspaces("v"))
-          .select(col("cb_id"), col("s.m").as("m"), col("s.sv").as("centv"))
-          .collect()
-          .groupBy(_.getInt(1))
-          .map { case (m, rows) =>
-            m -> rows.sortBy(_.getLong(0))
-              .map(r => r.getLong(0) -> r.getSeq[Long](2).toSeq).toSeq }
-        val cents2 = update(update(cents0))
-        val codes = assignTo(cents2)
-          .select(col("vec_id"), col("m"), col("cb_id").as("code"))
-        // the trained codebook as a LocalRelation for the LUT join —
-        // 32 rows at any scale
-        val cents2Df = {
-          import s.implicits._
-          cents2.toSeq.flatMap { case (m, cbs) =>
-            cbs.map { case (cb, cv) => (m, cb, cv) } }
-            .toDF("m", "cb_id", "centv")
-        }
-        val qlut = queries
-          .select(col("query_id"), subspaces("qv"))
-          .select(col("query_id"), col("s.m").as("m"), col("s.sv").as("qsv"))
-          .join(broadcast(cents2Df), Seq("m"))
-          .select(col("query_id"), col("m"), col("cb_id"),
-            graft.functions.VectorFunctions.longDot(col("qsv"), col("centv")).as("pdot"))
-        val wPq = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_pq").desc, col("vec_id"))
-        val pq = codes
-          .join(broadcast(qlut), codes("m") === qlut("m") && codes("code") === qlut("cb_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pdot")).as("dot_pq"))
-          .withColumn("rank", row_number().over(wPq)).filter(col("rank") <= 5)
-          .select(col("query_id").as("pq_qid"), col("vec_id").as("pq_vid"))
-        val wEx = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        val exact = corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("v"), col("qv")).as("dot"))
-          .withColumn("rank", row_number().over(wEx)).filter(col("rank") <= 5)
-          .select(col("query_id"), col("vec_id"))
-        exact
-          .join(pq, col("pq_qid") === col("query_id") && col("pq_vid") === col("vec_id"),
-            "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(when(col("pq_vid").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-          .withColumn("recall_fp", expr("(n_hit * 65536) div n_exact"))
+        val corpus = Ann.quantized(s, dir)
+        val queries = Ann.queries(corpus)
+        val cb = Ann.trainPQ(corpus, init = 8, rounds = 2)
+        val pq = Ann.adcTopK(Ann.encode(Ann.subspaces(corpus, "v", "vec_id"), cb),
+          Ann.lut(queries, cb), 5)
+        Ann.recall(Ann.exactTopK(corpus, queries, 5), pq)
       }),
 
     // ---- q179: SCALAR-QUANTIZED (SQ8) search + recall — the FAISS
-    // ScalarQuantizer topology: per-DIMENSION min/max over the corpus
-    // (the SQ "codebook": 2 arrays of 64 ints — a 1-row broadcast at
-    // any corpus size), each coordinate squeezed to an 8-bit code
-    // (x−mn)·255/(mx−mn), asymmetric scoring against full-precision
-    // queries via the ×255 common-denominator reconstruction
-    // recon = mn·255 + code·(mx−mn) — integer end to end (numerators
-    // are ≥ 0 by construction, so Spark's `div` and DuckDB's `//`
-    // agree), so encoding, scoring AND the recall measurement all sit
-    // under the hash gate. Unlike the untrained-PQ q172 (recall 0.16),
+    // ScalarQuantizer topology ([[Ann.sq8Recon]]): asymmetric scoring
+    // of full-precision queries against the ×255 reconstruction, so
+    // encoding, scoring AND the recall measurement all sit under the
+    // hash gate. Unlike the untrained-PQ q172 (recall 0.16),
     // SQ8 keeps per-dim resolution: recall@5 here is near-perfect —
     // the quantization-tradeoff endpoint a vector-infra team actually
     // compares. Output: q172's per-query recall shape. ----
     QuerySpec(
       "q179_ann_sq8_recall",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), dims AS (
-          SELECT d, MIN(x) AS mn, MAX(x) AS mx FROM (
-            SELECT u.d AS d, v[u.d] AS x
-            FROM qz, unnest(generate_series(1, len(v))) AS u(d)) e
-          GROUP BY d
-        ), cb AS (
-          SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs
-          FROM dims
-        ), recon AS (
-          SELECT vec_id,
-                 list_transform(generate_series(1, len(v)), i ->
-                   mns[i]*255 + ((v[i] - mns[i]) * 255 //
-                     (CASE WHEN mxs[i] - mns[i] > 0
-                           THEN mxs[i] - mns[i] ELSE 1 END))
-                     * (mxs[i] - mns[i])) AS r
-          FROM qz CROSS JOIN cb
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), sq AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, c.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY CAST(list_sum(list_transform(
-                       generate_series(1, len(c.r)),
-                       i -> c.r[i] * q.qv[i])) AS BIGINT) DESC, c.vec_id) AS rank
-            FROM recon c, q
-            WHERE c.vec_id <> q.query_id) t
-          WHERE rank <= 5
-        ), exact AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, c.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY CAST(list_sum(list_transform(
-                       generate_series(1, len(c.v)),
-                       i -> c.v[i] * q.qv[i])) AS BIGINT) DESC, c.vec_id) AS rank
-            FROM qz c, q
-            WHERE c.vec_id <> q.query_id) t
-          WHERE rank <= 5
-        )
-        SELECT exact.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN sq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_hit,
-               CAST(SUM(CASE WHEN sq.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) * 65536 // COUNT(*) AS recall_fp
-        FROM exact LEFT JOIN sq
-          ON sq.query_id = exact.query_id AND sq.vec_id = exact.vec_id
-        GROUP BY exact.query_id"""),
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.sq8Recon}, ${AnnOracle.q}, ${AnnOracle.topKIds("sq", "recon", "r", 5)}, ${AnnOracle.topKIds("exact", "qz", "v", 5)}
+        ${AnnOracle.recall("sq")}"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-        // the SQ8 "codebook": per-dim min/max, a 64-row aggregate
-        // reassembled into ONE broadcastable row of arrays
-        val dims = corpus.select(posexplode(col("v")).as(Seq("d", "x")))
-          .groupBy("d").agg(min("x").as("mn"), max("x").as("mx"))
-        val cb = dims.agg(
-          expr("transform(sort_array(collect_list(struct(d, mn))), s -> s.mn)").as("mns"),
-          expr("transform(sort_array(collect_list(struct(d, mx))), s -> s.mx)").as("mxs"))
-        // encode + reconstruct in one pass; range-0 dims code to 0 and
-        // reconstruct to mn·255 exactly
-        val recon = corpus.crossJoin(broadcast(cb))
-          .withColumn("r", expr(
-            """transform(sequence(0, size(v) - 1), i ->
-                 element_at(mns, i+1) * 255 +
-                 ((element_at(v, i+1) - element_at(mns, i+1)) * 255 div
-                    greatest(element_at(mxs, i+1) - element_at(mns, i+1), 1L))
-                   * (element_at(mxs, i+1) - element_at(mns, i+1)))"""))
-          .select(col("vec_id"), col("r"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val wSq = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_sq").desc, col("vec_id"))
-        val sq = recon.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("r"), col("qv")).as("dot_sq"))
-          .withColumn("rank", row_number().over(wSq)).filter(col("rank") <= 5)
-          .select(col("query_id").as("sq_qid"), col("vec_id").as("sq_vid"))
-        val wEx = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        val exact = corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("v"), col("qv")).as("dot"))
-          .withColumn("rank", row_number().over(wEx)).filter(col("rank") <= 5)
-          .select(col("query_id"), col("vec_id"))
-        exact
-          .join(sq, col("sq_qid") === col("query_id") && col("sq_vid") === col("vec_id"),
-            "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(when(col("sq_vid").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-          .withColumn("recall_fp", expr("(n_hit * 65536) div n_exact"))
+        val corpus = Ann.quantized(s, dir)
+        val queries = Ann.queries(corpus)
+        Ann.recall(Ann.exactTopK(corpus, queries, 5),
+          Ann.exactTopK(Ann.sq8Recon(corpus), queries, 5, vec = "r"))
       }),
 
     // ---- q186: TWO-STAGE serving — SQ8 first stage (q179's codes
@@ -2743,44 +1928,11 @@ object Extended {
     // vectors, not the corpus) and exact-reranks to top-5. This is the
     // standard production path (FAISS's refine / two-tower serving):
     // the quantized index bounds the scan, exactness comes from a
-    // join that moves almost nothing. Integer end to end. ----
+    // join that moves almost nothing. ----
     QuerySpec(
       "q186_ann_sq8_refine",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), dims AS (
-          SELECT d, MIN(x) AS mn, MAX(x) AS mx FROM (
-            SELECT u.d AS d, v[u.d] AS x
-            FROM qz, unnest(generate_series(1, len(v))) AS u(d)) e
-          GROUP BY d
-        ), cb AS (
-          SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs
-          FROM dims
-        ), recon AS (
-          SELECT vec_id,
-                 list_transform(generate_series(1, len(v)), i ->
-                   mns[i]*255 + ((v[i] - mns[i]) * 255 //
-                     (CASE WHEN mxs[i] - mns[i] > 0
-                           THEN mxs[i] - mns[i] ELSE 1 END))
-                     * (mxs[i] - mns[i])) AS r
-          FROM qz CROSS JOIN cb
-        ), q AS (
-          SELECT vec_id AS query_id, v AS qv FROM qz WHERE vec_id < 20
-        ), cand AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, c.vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY CAST(list_sum(list_transform(
-                       generate_series(1, len(c.r)),
-                       i -> c.r[i] * q.qv[i])) AS BIGINT) DESC, c.vec_id) AS rank
-            FROM recon c, q
-            WHERE c.vec_id <> q.query_id) t
-          WHERE rank <= 20
-        )
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.sq8Recon}, ${AnnOracle.q}, ${AnnOracle.topKIds("cand", "recon", "r", 20)}
         SELECT query_id, vec_id, dot, CAST(rank AS BIGINT) AS rank FROM (
           SELECT cand.query_id, cand.vec_id,
                  CAST(list_sum(list_transform(generate_series(1, len(c.v)),
@@ -2793,45 +1945,16 @@ object Extended {
           JOIN q ON q.query_id = cand.query_id) t
         WHERE rank <= 5"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dims = corpus.select(posexplode(col("v")).as(Seq("d", "x")))
-          .groupBy("d").agg(min("x").as("mn"), max("x").as("mx"))
-        val cb = dims.agg(
-          expr("transform(sort_array(collect_list(struct(d, mn))), s -> s.mn)").as("mns"),
-          expr("transform(sort_array(collect_list(struct(d, mx))), s -> s.mx)").as("mxs"))
-        val recon = corpus.crossJoin(broadcast(cb))
-          .withColumn("r", expr(
-            """transform(sequence(0, size(v) - 1), i ->
-                 element_at(mns, i+1) * 255 +
-                 ((element_at(v, i+1) - element_at(mns, i+1)) * 255 div
-                    greatest(element_at(mxs, i+1) - element_at(mns, i+1), 1L))
-                   * (element_at(mxs, i+1) - element_at(mns, i+1)))"""))
-          .select(col("vec_id"), col("r"))
-        val queries = corpus.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val wC = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot_sq").desc, col("vec_id"))
-        val cand = recon.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("r"), col("qv")).as("dot_sq"))
-          .withColumn("rank", row_number().over(wC)).filter(col("rank") <= 20)
+        val corpus = Ann.quantized(s, dir)
+        val queries = Ann.queries(corpus)
+        val cand = Ann.exactTopK(Ann.sq8Recon(corpus), queries, 20, vec = "r")
           .select(col("query_id"), col("vec_id"))
         // REFINE: full-precision vectors fetched for candidates only —
         // the broadcast is |queries|·20 pairs; the corpus streams
         // through one keyed join and the raw vectors never fan out
-        val wR = Window.partitionBy(col("query_id"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        corpus.join(broadcast(cand), "vec_id")
+        Ann.topK(corpus.join(broadcast(cand), "vec_id")
           .join(broadcast(queries), "query_id")
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.VectorFunctions.longDot(col("v"), col("qv")).as("dot"))
-          .withColumn("rank", row_number().over(wR).cast("long"))
-          .filter(col("rank") <= 5)
+          .select(col("query_id"), col("vec_id"), Ann.dot("v", "qv").as("dot")), "dot", 5)
       }),
 
     // ---- q190: INCREMENTAL IVF INDEX MAINTENANCE — the q169 nightly
@@ -2845,29 +1968,11 @@ object Extended {
     // (one k-means step, integer floor mean) and its L1 drift from the
     // frozen centroid — THE retrain trigger a 100 TB vector deployment
     // monitors. The oracle recomputes everything from the full corpus
-    // in one pass, so the hash gate proves incremental == recompute.
-    // All integer (q86 quantization, integer dots, floor means). ----
+    // in one pass, so the hash gate proves incremental == recompute. ----
     QuerySpec(
       "q190_ivf_incremental",
-      Some("""
-        WITH qz AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)) AS v
-          FROM embeddings
-        ), cents AS (
-          SELECT vec_id AS list_id, v AS centv FROM qz ORDER BY vec_id LIMIT 16
-        ), adot AS (
-          SELECT c.vec_id, c.v, ct.list_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(c.v)),
-                   i -> c.v[i] * ct.centv[i])) AS BIGINT) AS d
-          FROM qz c, cents ct
-        ), assigned AS (
-          SELECT vec_id, v, list_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                        ORDER BY d DESC, list_id) AS r FROM adot)
-          WHERE r = 1
-        ), cnt AS (
+      Some(s"""
+        WITH ${AnnOracle.qz()}, ${AnnOracle.cents(16)}, ${AnnOracle.assigned("v")}, cnt AS (
           SELECT list_id,
                  CAST(SUM(CASE WHEN vec_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_base,
@@ -2890,24 +1995,13 @@ object Extended {
         SELECT cnt.list_id, cnt.n_base, cnt.n_delta, cnt.n_total, drift.drift_l1
         FROM cnt JOIN drift USING (list_id)"""),
       (s, dir) => {
-        val emb = graft.operators.Fanout.forKernel(Tables.load(s, dir, "embeddings"))
-        val quant = expr(
-          "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), quant.as("v"))
-        // frozen-centroid assignment as a literal-codebook projection
-        // (see [[LitCodebook]]): no crossJoin, no argmax window, and no
-        // corpus-grain persist — the two consumers per side (component
-        // sums + list counts) share the scan via ReuseExchange, and a
-        // 16-dot projection re-runs cheaper than a corpus-grain
-        // array<long> cache writes at every scale
-        val centsL = LitCodebook.collect(
-          corpus.orderBy("vec_id").limit(16), "vec_id", "v")
-        def assign(side: org.apache.spark.sql.DataFrame) = side
-          .withColumn("list_id",
-            LitCodebook.argmaxDot(col("v"), centsL).getField("id"))
-          .select(col("vec_id"), col("v"), col("list_id"))
-        val aBase = assign(corpus.filter(col("vec_id") % 10 =!= 0))
-        val aDelta = assign(corpus.filter(col("vec_id") % 10 === 0))
+        val corpus = Ann.quantized(s, dir)
+        // frozen-centroid assignment, no corpus-grain persist: the two
+        // consumers per side (component sums + list counts) share the
+        // scan via ReuseExchange (see [[Ann]] on caching)
+        val cents = Ann.lowestIds(corpus, 16)
+        val aBase = Ann.assign(corpus.filter(col("vec_id") % 10 =!= 0), cents)
+        val aDelta = Ann.assign(corpus.filter(col("vec_id") % 10 === 0), cents)
         // mergeable sufficient statistics: (list, dim) component sums
         // and list counts, each side computed independently then added
         def comp(a: org.apache.spark.sql.DataFrame) = a
@@ -2928,7 +2022,7 @@ object Extended {
         // the frozen centroids join as a LocalRelation of 16×64 rows
         val centComp = {
           import s.implicits._
-          centsL.flatMap { case (id, cv) =>
+          cents.flatMap { case (id, cv) =>
             cv.zipWithIndex.map { case (cx, i) => (id, i + 1, cx) }
           }.toDF("list_id", "pos", "cx")
         }
