@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** At-rest APPEND-ONLY index state for the streaming ingest twins — the
   * shared state layer behind [[StreamPipeline.dedupIndexBatch]],
@@ -27,12 +28,13 @@ import org.apache.spark.sql.functions._
   *     tiny batches).
   *  2. BLOOM SIDECAR — each batch dir carries `_bloom`, a serialized
   *     filter over THAT batch's new elements, written right after the
-  *     parquet commit. The current filter is the driver-side OR-fold
-  *     of the committed sidecars (bounded bytes × dir count, dir
-  *     count bounded by compaction) — never rebuilt from the full
-  *     index. Blooms of equal geometry (numBits, hash count — both
-  *     derived from the constant (expectedItems, numBits) the twin
-  *     passes every batch) merge losslessly, the same additive-
+  *     parquet commit and stored GZIP-deflated (see [[writeBloom]]).
+  *     The current filter is the driver-side OR-fold of the committed
+  *     sidecars (one dense filter of numBits/8 bytes per dir in
+  *     memory, dir count bounded by compaction) — never rebuilt from
+  *     the full index. Blooms of equal geometry (numBits, hash count —
+  *     both derived from the constant (expectedItems, numBits) the
+  *     twin passes every batch) merge losslessly, the same additive-
   *     algebra property the rollup partials rely on. A dir whose
   *     sidecar is missing (crash between the parquet commit and the
   *     sidecar write) HEALS on read: its filter is rebuilt from that
@@ -237,8 +239,10 @@ object IndexState {
   }
 
   /** The folded filter over every committed batch (None before the
-    * first commit). Cost per call: dir-count × bounded bytes on the
-    * driver — NOT a scan of the index. Missing sidecars heal here.
+    * first commit). Cost per call: one inflate + parse per dir and one
+    * serialize on the driver — NOT a scan of the index. Each sidecar is
+    * parsed once: the filters [[readBloom]] validated merge in place.
+    * Missing sidecars heal here.
     *
     * SATURATION is checked on every fold (ADVICE r17): a filter sized
     * for `expectedItems` silently degrades once the landed element
@@ -255,13 +259,14 @@ object IndexState {
     val dirs = committedData(spark, stateBase)
     if (dirs.isEmpty) return None
     val conf = spark.sparkContext.hadoopConfiguration
-    def sidecars(): Seq[Array[Byte]] = dirs.map { d =>
+    def sidecars(): Seq[BloomFilter] = dirs.map { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(conf)
-      readBloom(fs, p).getOrElse(healBloom(spark, fs, p, elems, expectedItems, numBits))
+      readBloom(fs, p).getOrElse(graft.functions.BloomProbe.deserialize(
+        healBloom(spark, fs, p, elems, expectedItems, numBits)))
     }
     val merged =
-      try mergeBlooms(sidecars())
+      try sidecars().reduceLeft(_ mergeInPlace _)
       catch {
         case _: org.apache.spark.util.sketch.IncompatibleMergeException =>
           // geometry migration: the caller re-sized expectedItems /
@@ -274,27 +279,25 @@ object IndexState {
             fs.delete(new org.apache.hadoop.fs.Path(p, BloomFile), false)
             healBloom(spark, fs, p, elems, expectedItems, numBits)
           }
-          mergeBlooms(sidecars())
+          sidecars().reduceLeft(_ mergeInPlace _)
       }
-    merged.foreach { bytes =>
-      val fpp = saturation(bytes)
-      lastFold.put(stateBase, fpp)
-      if (fpp > SaturationWarnFpp)
-        log.warn(f"index-state bloom for $stateBase is saturating: expected " +
-          f"FP rate $fpp%.3f > $SaturationWarnFpp%.2f — the zero-positive " +
-          "fast path will stop firing; re-size the filter via the stream " +
-          "twin's expectedItems/numBits parameters (next compaction " +
-          "rebuilds sidecars at the new geometry)")
-    }
-    merged
+    val fpp = merged.expectedFpp()
+    lastFold.put(stateBase, fpp)
+    if (fpp > SaturationWarnFpp)
+      log.warn(f"index-state bloom for $stateBase is saturating: expected " +
+        f"FP rate $fpp%.3f > $SaturationWarnFpp%.2f — the zero-positive " +
+        "fast path will stop firing; re-size the filter via the stream " +
+        "twin's expectedItems/numBits parameters (next compaction " +
+        "rebuilds sidecars at the new geometry)")
+    Some(serialize(merged))
   }
 
   /** Expected false-positive rate of a serialized filter given what has
     * been inserted — the saturation metric [[currentBloom]] warns on,
-    * public so jobs can export it. */
+    * public so jobs can export it. Accepts the dense in-memory form and
+    * both at-rest forms of a `_bloom` file (see [[parseBloom]]). */
   def saturation(bloomBytes: Array[Byte]): Double =
-    org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(bloomBytes)).expectedFpp()
+    parseBloom(bloomBytes).expectedFpp()
 
   /** Folded-filter expected-FP threshold above which [[currentBloom]]
     * logs the saturation warning. */
@@ -377,10 +380,11 @@ object IndexState {
     else if (dirs.size >= maxDirs) true
     else {
       val conf = spark.sparkContext.hadoopConfiguration
-      // DATA bytes only: the constant-size `_bloom` sidecar (and the
-      // merged dir's `_postings`) would otherwise swamp the comparison
-      // at small batch sizes — a 1-row dir reads as "equal" to a
-      // 200-row dir once both carry an 8 KB bloom, and the trigger
+      // DATA bytes only: the `_bloom` sidecar (tens of KB deflated at
+      // the default geometry, never below the empty filter's few KB)
+      // and the merged dir's `_postings` would otherwise swamp the
+      // comparison at small batch sizes — a 1-row dir reads as "equal"
+      // to a 200-row dir once both carry a bloom, and the trigger
       // fires on every tiny tail batch (write amplification)
       val sizes = dirs.map { d =>
         val p = new org.apache.hadoop.fs.Path(d)
@@ -489,25 +493,18 @@ object IndexState {
           .toAggregateExpression()).as("_bf"))
       .head().getAs[Array[Byte]]("_bf")
     if (bytes != null) bytes
-    else serialize(org.apache.spark.util.sketch.BloomFilter
-      .create(expectedItems, numBits))
+    else serialize(BloomFilter.create(expectedItems, numBits))
   }
 
   /** OR-fold serialized filters (same geometry by construction —
     * incompatible inputs fail loudly in mergeInPlace, never merge
     * silently wrong). */
-  def mergeBlooms(bs: Seq[Array[Byte]]): Option[Array[Byte]] = {
-    if (bs.isEmpty) return None
-    val f = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(bs.head))
-    bs.tail.foreach { b =>
-      f.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(b)))
-    }
-    Some(serialize(f))
-  }
+  def mergeBlooms(bs: Seq[Array[Byte]]): Option[Array[Byte]] =
+    if (bs.isEmpty) None
+    else Some(serialize(
+      bs.map(graft.functions.BloomProbe.deserialize).reduceLeft(_ mergeInPlace _)))
 
-  private def serialize(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+  private def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     bos.toByteArray
@@ -525,6 +522,14 @@ object IndexState {
     bytes
   }
 
+  /** Persist a dir's sidecar: the GZIP of the dense serialized filter
+    * `bytes`. A batch sets only a few thousand of the filter's bits, so
+    * the dense form is mostly zero words — at the default geometry a
+    * 2,000-element batch's 1,048,592 dense bytes deflate to ~44 KB.
+    * BEST_SPEED costs ~2 ms per batch sidecar and ~6 ms per merged
+    * one; higher levels save ~25% more bytes at several times the
+    * time. Inflating restores the dense bytes exactly, so the bits and
+    * the fpp never depend on the at-rest form. */
   private def writeBloom(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
     // tmp name unique PER WRITER: concurrent healers sharing one tmp
@@ -533,7 +538,9 @@ object IndexState {
     // only its own fully-written bytes
     val tmp = new org.apache.hadoop.fs.Path(dir,
       BloomFile + ".tmp-" + java.util.UUID.randomUUID().toString)
-    val out = fs.create(tmp, true)
+    val out = new java.util.zip.GZIPOutputStream(fs.create(tmp, true), 1 << 16) {
+      `def`.setLevel(java.util.zip.Deflater.BEST_SPEED)
+    }
     try out.write(bytes) finally out.close()
     // atomic publish; a false rename means a concurrent healer already
     // published identical bytes — drop the tmp and keep theirs
@@ -541,23 +548,25 @@ object IndexState {
       fs.delete(tmp, false)
   }
 
-  /** Read a dir's sidecar, VALIDATING the bytes deserialize into a
-    * filter — a corrupt/truncated `_bloom` (torn rename on an
-    * object store, partial write) is quarantined (deleted) and treated
-    * as missing, so the caller's heal path rebuilds it from the dir's
-    * own rows instead of every subsequent batch throwing on the same
-    * poisoned file (ADVICE r17). */
+  /** Read a dir's sidecar, VALIDATING the bytes decode into a filter
+    * and handing back that filter — a corrupt/truncated `_bloom` (torn
+    * rename on an object store, partial write) is quarantined (deleted)
+    * and treated as missing, so the caller's heal path rebuilds it from
+    * the dir's own rows instead of every subsequent batch throwing on
+    * the same poisoned file (ADVICE r17). */
   private def readBloom(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Array[Byte]] = {
+      dir: org.apache.hadoop.fs.Path): Option[BloomFilter] = {
     val p = new org.apache.hadoop.fs.Path(dir, BloomFile)
     if (!fs.exists(p)) None
     else {
       // only PROVEN corruption quarantines (ADVICE r18): a filesystem
       // checksum mismatch on the raw read, or bytes that were FULLY
-      // read but fail to deserialize. A transient open/read failure
-      // (object-store hiccup) propagates so a retry can reuse the
-      // intact file — deleting on it would discard a good sidecar and,
-      // for the merged dir, force a full compacted-corpus rebuild.
+      // read but fail to decode (a bad GZIP trailer — CRC32 or length,
+      // so a truncated file — or a filter that does not parse). A
+      // transient open/read failure (object-store hiccup) propagates so
+      // a retry can reuse the intact file — deleting on it would discard
+      // a good sidecar and, for the merged dir, force a full
+      // compacted-corpus rebuild.
       val buf =
         try {
           val len = fs.getFileStatus(p).getLen.toInt
@@ -572,15 +581,29 @@ object IndexState {
             fs.delete(p, false)
             return None
         }
-      try {
-        org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(buf))
-        Some(buf)
-      } catch {
+      try Some(parseBloom(buf))
+      catch {
         case scala.util.control.NonFatal(_) =>
           fs.delete(p, false)
           None
       }
     }
+  }
+
+  /** Decode a sidecar in either at-rest form. [[writeBloom]] writes
+    * GZIP (magic `1f 8b`); a sidecar written before the deflated
+    * layout holds Spark's dense serialization, which opens with a
+    * big-endian version int (first byte `00`) and parses as-is — old
+    * state folds with no migration. The inflate runs to end of stream
+    * so the GZIP trailer's CRC32 and length are checked; a failed
+    * check throws like bytes that do not parse. */
+  private def parseBloom(bytes: Array[Byte]): BloomFilter = {
+    val dense =
+      if (bytes.length >= 2 && bytes(0) == 0x1f.toByte && bytes(1) == 0x8b.toByte) {
+        val in = new java.util.zip.GZIPInputStream(
+          new java.io.ByteArrayInputStream(bytes), 1 << 16)
+        try in.readAllBytes() finally in.close()
+      } else bytes
+    graft.functions.BloomProbe.deserialize(dense)
   }
 }

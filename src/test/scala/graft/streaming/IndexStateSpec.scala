@@ -201,6 +201,76 @@ class IndexStateSpec extends SparkSpec {
     // healed: the sidecar parses again
     assert(IndexState.saturation(
       java.nio.file.Files.readAllBytes(bloomFile.toPath)) >= 0.0)
+    // a deflated sidecar cut short (its GZIP trailer lost): the GZIP
+    // trailer check must catch it, so drop the local fs's .crc sidecar
+    // (object stores have no such layer). Batch 1 compacted, so the
+    // live sidecar is the merged dir's.
+    val live = IndexState.committedData(spark, idx)
+    assert(live.size == 1, s"fixture expects one merged dir: $live")
+    val merged = new java.io.File(new java.net.URI(live.head).getPath, "_bloom")
+    val healed = java.nio.file.Files.readAllBytes(merged.toPath)
+    java.nio.file.Files.write(merged.toPath, healed.take(healed.length - 4))
+    new java.io.File(merged.getParentFile, "._bloom.crc").delete()
+    StreamPipeline.dedupIndexBatch(
+      batchOf((4L, "alpha body"), (5L, "gamma body")), 2L, "doc_id", "text",
+      out, idx, maxIndexDirs = Int.MaxValue)
+    val after = spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
+    assert(after == Set(1L, 3L, 5L), s"got $after")
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(merged.toPath), healed),
+      "the truncated sidecar must be quarantined and healed to the same bytes")
+  }
+
+  test("deflated sidecar: a 2,000-doc batch stays under 64 KiB; the fold and saturation keep the dense filter") {
+    val out = tmp("gz-out") + "/out"
+    val idx = tmp("gz-idx") + "/index"
+    StreamPipeline.dedupIndexBatch(
+      (0L until 2000L).map(i => (i, s"deflate body number $i")).toDF("doc_id", "text"),
+      0L, "doc_id", "text", out, idx)
+    // the dense form at the default geometry is 1,048,592 bytes
+    val bloomFile = new java.io.File(s"$idx/batch=0/_bloom")
+    assert(bloomFile.length() < 64 * 1024, s"sidecar is ${bloomFile.length()} B")
+    val folded = IndexState.currentBloom(spark, idx, IndexState.dedupElems,
+      StreamPipeline.IndexBloomItems, StreamPipeline.IndexBloomBits).get
+    assert(folded.length == 1048592, s"the fold hands back dense bytes: ${folded.length}")
+    val raw = java.nio.file.Files.readAllBytes(bloomFile.toPath)
+    assert(IndexState.saturation(raw) == IndexState.lastSaturation(idx).get)
+    assert(IndexState.saturation(raw) == IndexState.saturation(folded))
+  }
+
+  test("a dense sidecar from before the deflated layout folds as-is, with no heal, like its deflated form") {
+    val base = tmp("dense") + "/state"
+    val elems = (idx: org.apache.spark.sql.DataFrame) =>
+      idx.select(xxhash64(col("h").cast("string")).as("_e"))
+    IndexState.append((1L to 100L).toDF("h"), 0L, base, elems, 1000L, 1L << 16)
+    IndexState.append((101L to 200L).toDF("h"), 1L, base, elems, 1000L, 1L << 16)
+    val bloomFile = new java.io.File(s"$base/batch=0/_bloom")
+    val deflated = java.nio.file.Files.readAllBytes(bloomFile.toPath)
+    assert(deflated(0) == 0x1f.toByte && deflated(1) == 0x8b.toByte,
+      "sidecars are written as GZIP")
+    val allDeflated = IndexState.currentBloom(spark, base, elems, 1000L, 1L << 16).get
+    // rewrite batch 0's sidecar the way it was written before: the
+    // dense BloomFilter.writeTo bytes, through the hadoop fs (fresh .crc)
+    val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(deflated)))
+    val path = new org.apache.hadoop.fs.Path(bloomFile.toURI)
+    val os = path.getFileSystem(spark.sparkContext.hadoopConfiguration).create(path, true)
+    try bf.writeTo(os) finally os.close()
+    val dense = java.nio.file.Files.readAllBytes(bloomFile.toPath)
+    assert(dense(0) == 0 && dense.length > deflated.length, "fixture expects the dense form")
+    assert(IndexState.saturation(dense) == IndexState.saturation(deflated))
+    val mixed = IndexState.currentBloom(spark, base, elems, 1000L, 1L << 16).get
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(bloomFile.toPath), dense),
+      "a dense sidecar must fold as-is, not be quarantined or healed")
+    assert(java.util.Arrays.equals(mixed, allDeflated),
+      "a mixed dense + deflated fold must equal the all-deflated fold")
+    def probe(bloom: Array[Byte]) = (1L to 400L).toDF("v")
+      .select(IndexState.mightContain(bloom, xxhash64(col("v").cast("string"))))
+      .collect().map(_.getBoolean(0)).toSeq
+    val hits = probe(mixed)
+    assert(hits == probe(allDeflated))
+    assert(hits.take(200).forall(identity), "no false negatives in the mixed fold")
   }
 
   test("geometry re-size mid-stream: incompatible sidecars migrate on the next fold") {
