@@ -106,10 +106,6 @@ object Tables {
     }
     else df
   }
-
-  /** Register all tables as temp views (SURVEY §2.1 S6). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }
 
 /** One engine capability = one named query + optionally one DuckDB oracle.

@@ -24,9 +24,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     shim.column(CosineSimilarity(shim.expression(a), shim.expression(b)))
 
-  /** L2 norm. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Exact int64 dot for quantized vectors ([[LongDotProduct]] kernel —
     * codegen'd; value-identical to the interpreted HOF form, which at
     * PAIR grain was the quantized family's hot path). */

@@ -10,14 +10,18 @@ import org.apache.spark.sql.functions._
   *   - `xxSql`: the Spark SQL text against registered temp views
   *     (pin_table / geo_table / user_table), matching the reference's
   *     `%sql` cells' semantics and output columns;
-  *   - `xxDf`: the typed DataFrame/Window implementation.
+  *   - `xxDf`: the DataFrame implementation the pipeline lands, planned
+  *     for the fewest Spark stages that give the same rows.
   * Tests assert both forms produce identical results (plan-independent
   * equality).
   *
-  * Medians use `approx_percentile` exactly as the reference does
-  * (README.md:213) — the windowed-aggregate-plus-DISTINCT form is kept
-  * for parity (task8/10/11 `...Df`) and the cleaner groupBy form is
-  * provided as `...GroupByDf`; tests assert they agree.
+  * The SQL forms keep the reference's text, and so its plan shapes: the
+  * windowed `approx_percentile` plus `DISTINCT` of Tasks 8/10/11, the
+  * global `ORDER BY` of Tasks 5/7/11 and Task 6.2 over the 6.1 ranking.
+  * The DataFrame forms compute the same rows more cheaply: medians are
+  * one group-grain aggregate (the shape `plans.RewriteWindowedDistinctAgg`
+  * produces), an `ORDER BY` over a group-grain result lands as one
+  * sorted partition ([[sortedSmall]]), and Task 6.2 is a direct top-1.
   */
 object PinQueries {
 
@@ -44,6 +48,25 @@ object PinQueries {
       |  WHEN age > 50 THEN '50+'
       |  ELSE NULL
       |END""".stripMargin
+
+  /** The reference's median, `approx_percentile(follower_count, 0.5)` at
+    * its default accuracy, as the aggregate column of Tasks 8/10/11.
+    * Evaluated per group (partial, then final merge) it equals the
+    * windowed form bit for bit while a group holds fewer than 5,000
+    * non-null values: below that `QuantileSummaries` inserts with
+    * `delta = 0` and compresses nothing, because 2·ε·n < 1. Above it the
+    * forms may differ, each within the same 1/10,000 rank error. */
+  private def medianFollowers: Column =
+    percentile_approx(col("follower_count"), lit(0.5), lit(10000))
+      .as("median_follower_count")
+
+  /** Lands a group-grain result in `ORDER BY` order as one sorted
+    * partition: no range-partition sampling job, and the aggregate below
+    * stays parallel (unlike `coalesce(1)`). It sorts at most one row per
+    * group, so use it only over an aggregate's output. Task 7 spells it
+    * out, with its rank between the shuffle and the sort. */
+  private def sortedSmall(df: DataFrame, order: Column*): DataFrame =
+    df.repartition(1).sortWithinPartitions(order: _*)
 
   // ---- Task 4: most popular category per country (:3417-3445) --------
 
@@ -82,11 +105,12 @@ object PinQueries {
     ORDER BY year, category"""
 
   def task5Df(pin: DataFrame, geo: DataFrame): DataFrame =
-    pin.join(geo, Seq("ind"))
-      .filter(year(col("timestamp")).between(2018, 2022))
-      .groupBy(year(col("timestamp")).as("year"), col("category"))
-      .agg(count(col("category")).as("category_count"))
-      .orderBy(col("year"), col("category"))
+    sortedSmall(
+      pin.join(geo, Seq("ind"))
+        .filter(year(col("timestamp")).between(2018, 2022))
+        .groupBy(year(col("timestamp")).as("year"), col("category"))
+        .agg(count(col("category")).as("category_count")),
+      col("year"), col("category"))
 
   // ---- Task 6.1: top follower_count user per country (:5497-5518) ----
 
@@ -116,12 +140,17 @@ object PinQueries {
   // :5687); our DataFrame twin adds a country tiebreak so strict runs
   // are deterministic — documented deviation (SURVEY §7.4). ----
 
-  def task6Part2Df(task6Part1: DataFrame): DataFrame =
-    task6Part1
-      .groupBy(col("follower_count"), col("country")).agg(lit(1).as("_g"))
+  /** Task 6.2 as a direct top-1 over the join's `(country,
+    * follower_count)`: the same row as ranking within each country
+    * first. The global max M is rank 1 in every country that holds it,
+    * so the smallest such country wins either way; `desc` puts a null
+    * count last and `country` ascending puts a null country first in
+    * both forms. */
+  def task6Part2Df(pin: DataFrame, geo: DataFrame, user: DataFrame): DataFrame =
+    geo.join(user, Seq("ind")).join(pin, Seq("ind"))
+      .select(col("country"), col("follower_count"))
       .orderBy(col("follower_count").desc, col("country"))
       .limit(1)
-      .select("country", "follower_count")
 
   /** Task 6.2 SQL form — the reference's `%sql` cell at
     * BatchProcessingFinal.ipynb:5672-5687 wrapped over the 6.1 CTE, with
@@ -173,10 +202,14 @@ object PinQueries {
       .groupBy(col("age_group"), col("category"))
       .agg(count(col("category")).as("category_count"))
     val w = Window.partitionBy(col("age_group")).orderBy(col("category_count").desc)
-    counts.withColumn("ranked", rank().over(w))
+    // the rank runs in the one partition the ORDER BY lands in: that
+    // partition satisfies the window's clustering, so there is no second
+    // shuffle, and the window's output is already in age_group order
+    counts.repartition(1)
+      .withColumn("ranked", rank().over(w))
       .filter(col("ranked") === 1)
       .select("age_group", "category", "category_count")
-      .orderBy("age_group")
+      .sortWithinPartitions(col("age_group"))
   }
 
   // ---- Task 8: median follower count per age group (:6200-6217) ------
@@ -191,27 +224,14 @@ object PinQueries {
              median_follower_count
     FROM follower_table"""
 
-  /** Parity form: windowed approx_percentile + DISTINCT, as written. */
-  def task8Df(pin: DataFrame, user: DataFrame): DataFrame = {
-    val ft = pin.join(user, Seq("ind"))
-      .select(col("follower_count"), ageGroup(col("age")).as("age_group"))
-    val w = Window.partitionBy(col("age_group"))
-    ft.select(
-      col("age_group"),
-      percentile_approx(col("follower_count"), lit(0.5), lit(10000))
-        .over(w).as("median_follower_count"))
-      .distinct()
-  }
-
-  /** Spark-native form: groupBy aggregation — one pass, no
-    * per-row window duplication (fixes the reference de-optimization
-    * noted in SURVEY §4.3); tests assert equality with task8Df. */
-  def task8GroupByDf(pin: DataFrame, user: DataFrame): DataFrame =
+  /** Task 8 as one group-grain aggregate of the same
+    * `percentile_approx(follower_count, 0.5, 10000)` over the same rows
+    * as [[task8Sql]]'s window, with no window sort and no `DISTINCT`.
+    * See [[medianFollowers]] for when the two forms are bit-identical. */
+  def task8Df(pin: DataFrame, user: DataFrame): DataFrame =
     pin.join(user, Seq("ind"))
-      .select(col("follower_count"), ageGroup(col("age")).as("age_group"))
-      .groupBy(col("age_group"))
-      .agg(percentile_approx(col("follower_count"), lit(0.5), lit(10000))
-        .as("median_follower_count"))
+      .groupBy(ageGroup(col("age")).as("age_group"))
+      .agg(medianFollowers)
 
   /** Exact-median twin of Task 8 (A10 — the reference's own commented
     * `PERCENTILE_CONT` road, BatchProcessingFinal.ipynb:6214): same
@@ -248,16 +268,11 @@ object PinQueries {
              median_follower_count
     FROM year_table"""
 
-  def task10Df(pin: DataFrame, user: DataFrame): DataFrame = {
-    val yt = user.join(pin, Seq("ind"))
-      .select(year(col("date_joined")).as("post_year"), col("follower_count"))
-    val w = Window.partitionBy(col("post_year"))
-    yt.select(
-      col("post_year"),
-      percentile_approx(col("follower_count"), lit(0.5), lit(10000))
-        .over(w).as("median_follower_count"))
-      .distinct()
-  }
+  /** Task 10 as one group-grain aggregate (see [[task8Df]]). */
+  def task10Df(pin: DataFrame, user: DataFrame): DataFrame =
+    user.join(pin, Seq("ind"))
+      .groupBy(year(col("date_joined")).as("post_year"))
+      .agg(medianFollowers)
 
   /** Exact-median twin of Task 10 (see [[task8ExactDf]]). */
   def task10ExactDf(pin: DataFrame, user: DataFrame): DataFrame =
@@ -280,20 +295,16 @@ object PinQueries {
     FROM follower_table
     ORDER BY post_year, age_group"""
 
-  def task11Df(pin: DataFrame, user: DataFrame): DataFrame = {
-    val ft = pin.join(user, Seq("ind"))
-      .select(
-        col("follower_count"),
-        year(col("date_joined")).as("post_year"),
-        ageGroup(col("age")).as("age_group"))
-    val w = Window.partitionBy(col("age_group"), col("post_year"))
-    ft.select(
-      col("post_year"), col("age_group"),
-      percentile_approx(col("follower_count"), lit(0.5), lit(10000))
-        .over(w).as("median_follower_count"))
-      .distinct()
-      .orderBy(col("post_year"), col("age_group"))
-  }
+  /** Task 11 as one group-grain aggregate (see [[task8Df]]), landed in
+    * `ORDER BY` order by [[sortedSmall]]. */
+  def task11Df(pin: DataFrame, user: DataFrame): DataFrame =
+    sortedSmall(
+      pin.join(user, Seq("ind"))
+        .groupBy(
+          year(col("date_joined")).as("post_year"),
+          ageGroup(col("age")).as("age_group"))
+        .agg(medianFollowers),
+      col("post_year"), col("age_group"))
 
   /** Exact-median twin of Task 11 (see [[task8ExactDf]]). */
   def task11ExactDf(pin: DataFrame, user: DataFrame): DataFrame =
@@ -350,7 +361,7 @@ object PinQueries {
       "task4" -> task4Df(pin, geo),
       "task5" -> task5Df(pin, geo),
       "task6_1" -> task6Part1Df(pin, geo, user),
-      "task6_2" -> task6Part2Df(task6Part1Df(pin, geo, user)),
+      "task6_2" -> task6Part2Df(pin, geo, user),
       "task7" -> task7Df(pin, user),
       "task8" -> task8Df(pin, user),
       "task9" -> task9Df(user),

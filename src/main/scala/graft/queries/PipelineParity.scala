@@ -278,6 +278,6 @@ object PipelineParity {
         LIMIT 1""")),
       (s, _) => {
         val (pin, geo, user) = cleaned(s)
-        PinQueries.task6Part2Df(PinQueries.task6Part1Df(pin, geo, user))
+        PinQueries.task6Part2Df(pin, geo, user)
       }))
 }

@@ -100,15 +100,21 @@ object PipelineMain {
     // KafkaTableSource(bootstrap, prefix) and nothing downstream changes
     val source = graft.sources.FileJsonTableSource(baseDir)
     import graft.sources.PipelineTable._
-    val pin = Clean.pin(source.readBatch(spark, Pin))
-    val geo = Clean.geo(source.readBatch(spark, Geo))
-    val user = Clean.user(source.readBatch(spark, User))
+    val clean = Seq(
+      "pin" -> Clean.pin(source.readBatch(spark, Pin)),
+      "geo" -> Clean.geo(source.readBatch(spark, Geo)),
+      "user" -> Clean.user(source.readBatch(spark, User)))
 
     // cleaned tables land as parquet (columnar at rest — fixes the
-    // reference's one-JSON-file-per-message landing, SURVEY §4.2)
-    pin.write.mode("overwrite").parquet(s"$outDir/clean/pin")
-    geo.write.mode("overwrite").parquet(s"$outDir/clean/geo")
-    user.write.mode("overwrite").parquet(s"$outDir/clean/user")
+    // reference's one-JSON-file-per-message landing, SURVEY §4.2), and
+    // the tasks read them back from there, so the JSON is parsed once,
+    // as the reference's temp views are. The schema is the cleaned
+    // plan's, so the read starts no footer-inference job.
+    val Seq(pin, geo, user) = clean.map { case (name, df) =>
+      val dir = s"$outDir/clean/$name"
+      df.write.mode("overwrite").parquet(dir)
+      spark.read.schema(df.schema).parquet(dir)
+    }
 
     for ((name, df) <- PinQueries.allDf(pin, geo, user).toSeq.sortBy(_._1))
       df.write.mode("overwrite").parquet(s"$outDir/tasks/$name")

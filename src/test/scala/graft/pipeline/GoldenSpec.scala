@@ -38,7 +38,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("golden task8: approx-median follower count per age group") {
-    val got = PinQueries.task8GroupByDf(pin, user)
+    val got = PinQueries.task8Df(pin, user)
       .as[(Option[String], Int)].collect().toSet
     assert(got == Set(
       (None, 437000), (Some("18-24"), 745000), (Some("25-35"), 269000),
@@ -51,7 +51,7 @@ class GoldenSpec extends SparkSpec {
     assert(t4.agg(org.apache.spark.sql.functions.sum("count")).head().getLong(0) == 86L)
     val t61 = PinQueries.task6Part1Df(pin, geo, user)
     assert(t61.count() == 10)
-    val t62 = PinQueries.task6Part2Df(t61).as[(String, Int)].head()
+    val t62 = PinQueries.task6Part2Df(pin, geo, user).as[(String, Int)].head()
     assert(t62 == ("American Samoa", 94000000))
   }
 }

@@ -54,7 +54,7 @@ class PinTasksSpec extends SparkSpec {
 
   test("task6.2 picks the global max follower count") {
     val t61 = PinQueries.task6Part1Df(pin, geo, user)
-    val t62 = PinQueries.task6Part2Df(t61)
+    val t62 = PinQueries.task6Part2Df(pin, geo, user)
     assert(t62.count() == 1)
     val globalMax = t61.agg(max("follower_count")).head().getInt(0)
     assert(t62.head().getInt(1) == globalMax)
@@ -66,11 +66,73 @@ class PinTasksSpec extends SparkSpec {
     assert(groups.subsetOf(Set("18-24", "25-35", "36-50", "50+", null)))
   }
 
-  test("task8: windowed+DISTINCT parity form equals groupBy form") {
-    assertSameRows(
-      PinQueries.task8Df(pin, user),
-      PinQueries.task8GroupByDf(pin, user),
+  test("tasks 8/10/11: windowed+DISTINCT SQL forms equal the groupBy forms") {
+    PinQueries.registerViews(pin, geo, user)
+    assertSameRows(spark.sql(PinQueries.task8Sql), PinQueries.task8Df(pin, user),
       "task8 window vs groupBy")
+    assertSameRows(spark.sql(PinQueries.task10Sql), PinQueries.task10Df(pin, user),
+      "task10 window vs groupBy")
+    assertSameRows(spark.sql(PinQueries.task11Sql), PinQueries.task11Df(pin, user),
+      "task11 window vs groupBy")
+  }
+
+  test("allDf plans: no Window for the medians or 6.2, no global Sort for 5/7/11") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Sort, Window}
+    val plans = PinQueries.allDf(pin, geo, user).map { case (n, df) =>
+      n -> df.queryExecution.optimizedPlan }
+    for (n <- Seq("task8", "task10", "task11", "task6_2"))
+      assert(plans(n).collect { case w: Window => w }.isEmpty, s"$n:\n${plans(n)}")
+    for (n <- Seq("task5", "task7", "task11"))
+      assert(plans(n).collect { case s: Sort if s.global => s }.isEmpty, s"$n:\n${plans(n)}")
+  }
+
+  test("tasks 5/7/11 land as one parquet file in ORDER BY order") {
+    val out = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+    val orderBy = Map("task5" -> Seq("year", "category"), "task7" -> Seq("age_group"),
+      "task11" -> Seq("post_year", "age_group"))
+    val tasks = PinQueries.allDf(pin, geo, user)
+    for ((n, keys) <- orderBy) {
+      tasks(n).write.parquet(s"$out/$n")
+      val files = new java.io.File(s"$out/$n").listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$n: ${files.length} files")
+      val landed = spark.read.parquet(s"$out/$n").select(keys.map(col): _*)
+      assert(landed.count() > 1, n)
+      assert(landed.collect().toSeq == landed.orderBy(keys.map(col): _*).collect().toSeq, n)
+    }
+  }
+
+  test("task6.2's direct top-1 equals the SQL form on tie, null and duplicate cases") {
+    import spark.implicits._
+    // (ind, country, follower_count) per case; user_name is the ind
+    val cases = Seq(
+      "two-country tie at the max, one country null" -> Seq(
+        (1, Option("B"), Option(100)), (2, None, Option(100)),
+        (3, Option("A"), Option(50)), (4, Option("C"), Option(100))),
+      "all follower counts null" -> Seq(
+        (1, Option("B"), None), (2, Option("A"), None), (3, Option("C"), None)),
+      "duplicated join rows" -> Seq(
+        (1, Option("B"), Option(7)), (1, Option("B"), Option(7)),
+        (2, Option("A"), Option(7)), (2, Option("A"), Option(7)), (3, Option("C"), Option(5))))
+    for ((name, rows) <- cases) {
+      val p = rows.map { case (i, _, fc) => (i, fc) }.toDF("ind", "follower_count")
+      val g = rows.map { case (i, c, _) => (i, c) }.toDF("ind", "country")
+      val u = rows.map { case (i, _, _) => (i, s"user$i") }.toDF("ind", "user_name")
+      PinQueries.registerViews(p, g, u)
+      val sqlForm = spark.sql(PinQueries.task6Part2Sql)
+      assert(sqlForm.count() == 1, name)
+      assertSameRows(sqlForm, PinQueries.task6Part2Df(p, g, u), name)
+    }
+  }
+
+  test("building allDf starts no Spark job") {
+    import graft.sources.PipelineTable._
+    val source = graft.sources.FileJsonTableSource(base.toString)
+    val (tasks, jobs) = withJobs(PinQueries.allDf(
+      Clean.pin(source.readBatch(spark, Pin)),
+      Clean.geo(source.readBatch(spark, Geo)),
+      Clean.user(source.readBatch(spark, User))))
+    assert(tasks.size == 9)
+    assert(jobs.isEmpty, jobs.mkString("; "))
   }
 
   test("task9 counts sum to the user row count") {

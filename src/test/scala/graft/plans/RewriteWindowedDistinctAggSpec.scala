@@ -42,7 +42,7 @@ class RewriteWindowedDistinctAggSpec extends SparkSpec {
   }
 
   test("matches the reference Task-8 shape end to end") {
-    // same composition as PinQueries.task8Df: join → project(band, windowed
+    // same composition as PinQueries.task8Sql: join → project(band, windowed
     // approx median) → distinct
     val users = (1 to 200).map(i => (i.toLong, 15 + i % 50)).toDF("ind", "age")
     val pins = (1 to 200).map(i => (i.toLong, (i * 37 % 9000))).toDF("ind", "follower_count")
