@@ -127,7 +127,16 @@ object Dedup {
     * co-partitioned on the hash — the one exchange scales with
     * |positives|, not |batch| or |index|. False positives cost an
     * exact re-check, never a wrong drop (asserted under a
-    * collision-heavy filter in DedupSpec).
+    * collision-heavy filter in DedupSpec). The index side is NOT
+    * de-duplicated: a left-anti join and a bloom over the index give
+    * the same answer with or without repeated hashes, and a distinct
+    * would aggregate and shuffle the whole index on every batch that
+    * has a positive — a term that grows with the corpus.
+    *
+    * Streaming callers (`precomputedBloom` set) get a zero-positive
+    * fast path: a batch none of whose hashes is bloom-positive returns
+    * its keepers without reading the index at all, checked by one
+    * narrow job over the batch's rows.
     *
     * Hash family: md5 over normalized text — the at-rest index family
     * a DuckDB oracle can replay (q130); the xxhash64 production family
@@ -137,7 +146,7 @@ object Dedup {
       expectedItems: Long = 1000000L, numBits: Long = 1L << 23,
       precomputedBloom: Option[Array[Byte]] = None): DataFrame = {
     import org.apache.spark.sql.graft.shim
-    val idx = indexHashes.select(col(indexHashCol).as("_ih")).distinct()
+    val idx = indexHashes.select(col(indexHashCol).as("_ih"))
     // within-batch keepers via ONE min_by aggregate, not a window over
     // the content hash (the [[exact]] r14 rationale — a hot clique
     // buffers its whole instance set in one window partition — without
@@ -173,15 +182,20 @@ object Dedup {
     // zero-positive fast path: when NO batch hash is bloom-positive —
     // the overwhelmingly common fresh-crawl batch — the index is
     // provably disjoint and the anti-join (whose right side would scan
-    // the index) is skipped entirely. The check is one bounded job
-    // over the batch (limit-1 after the filter), never over the index.
+    // the index) is skipped entirely. The check probes the
+    // PRE-aggregate rows: keeper election keeps one row per hash and
+    // never adds or drops a hash, so some keeper is positive iff some
+    // row is — and the check is one narrow job (limit-1 after the
+    // filter, no aggregate exchange), never over the index.
     // STREAMING callers only (precomputedBloom set): a batch caller
     // already paid a full index scan to AGGREGATE its bloom, so the
     // skippable anti-join is second-order for it while the probe is a
     // guaranteed extra job — the r17 q130 1.35× constant (VERDICT r17
     // wrong#4); batch callers go straight to the split plan.
+    if (precomputedBloom.isDefined &&
+        batchHashed.filter(mightContain(col("content_hash"))).isEmpty)
+      return batchKept
     val positives = batchKept.filter(mightContain(col("content_hash")))
-    if (precomputedBloom.isDefined && positives.isEmpty) return batchKept
     batchKept.filter(!mightContain(col("content_hash")))
       .unionByName(
         positives.join(idx, col("content_hash") === col("_ih"), "left_anti"))
@@ -232,7 +246,7 @@ object Dedup {
     val idx = indexHashes.select(col(indexHashCol).cast("long").as("_ih")).distinct()
     // (b) bloom over the index's pigeonhole (chunk, value) keys — from
     // the at-rest sidecar fold when the caller maintains one
-    // ([[graft.streaming.IndexState.dhashElems]], same elements), else
+    // ([[graft.streaming.IndexState.dhashLayout]], same elements), else
     // aggregated from the index here (batch/one-shot callers).
     val bloomBytes = precomputedBloom.getOrElse {
       if (idx.isEmpty) return batchKept

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** At-rest APPEND-ONLY index state for the streaming ingest twins — the
@@ -27,8 +28,15 @@ import org.apache.spark.util.sketch.BloomFilter
   *     (listing + bloom-fold cost per batch stays bounded even under
   *     tiny batches).
   *  2. BLOOM SIDECAR — each batch dir carries `_bloom`, a serialized
-  *     filter over THAT batch's new elements, written right after the
-  *     parquet commit and stored GZIP-deflated (see [[writeBloom]]).
+  *     filter over THAT batch's new elements, stored GZIP-deflated (see
+  *     [[writeBloom]]). When the write that lands the rows is one task
+  *     (every bench-scale batch and merge), that write builds it: the
+  *     filter is OBSERVED on it (`Dataset.observe`, one aggregate per
+  *     element expression, OR-merged on the driver) and written right
+  *     after the parquet commit — no second read of the dir, no
+  *     separate aggregate job. A multi-file write builds it with one
+  *     aggregate over the written rows instead, so the driver never
+  *     receives a filter per task ([[observedIfOneTask]]).
   *     The current filter is the driver-side OR-fold of the committed
   *     sidecars (one dense filter of numBits/8 bytes per dir in
   *     memory, dir count bounded by compaction) — never rebuilt from
@@ -39,12 +47,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *     sidecar is missing (crash between the parquet commit and the
   *     sidecar write) HEALS on read: its filter is rebuilt from that
   *     ONE dir's rows — bounded by a single batch — and persisted
-  *     back, so the torn window never grows. Decontamination's
+  *     back, so the torn window never grows ([[healBloom]], also the
+  *     path of a replay whose marker exists and of a multi-file
+  *     write). Decontamination's
   *     fold-once blocklist bloom (`decontaminateStream`) is the same
   *     pattern for static state; this is its incremental form.
   *
-  * Elements are 64-bit longs, pre-hashed by the element derivations
-  * below so the probe side can compute the IDENTICAL expression
+  * Each twin DECLARES its state once ([[Layout]]): the schema every
+  * read uses (no schema-inference job per read) and the element
+  * expressions. Elements are 64-bit longs, pre-hashed by those
+  * expressions so the probe side can compute the IDENTICAL expression
   * against the folded filter ([[org.apache.spark.sql.catalyst
   * .expressions.BloomFilterMightContain]] over a broadcast literal).
   * An empty batch serializes the EMPTY filter at the same geometry so
@@ -53,38 +65,54 @@ import org.apache.spark.util.sketch.BloomFilter
 object IndexState {
   private val BloomFile = "_bloom"
 
-  // ---- element derivations (each must match its probe expression) ----
+  // ---- declared layouts (each twin's schema and bloom elements) ----
+
+  /** One index twin's at-rest layout, declared once: the DDL its rows
+    * are read with (never inferred from the files — inference is a
+    * Spark job per read) and the bloom elements one row contributes, as
+    * 64-bit expressions over those columns (a null element adds
+    * nothing). The same expressions fill a sidecar two ways — observed
+    * on the write that lands the rows ([[append]], [[compact]]) and
+    * rebuilt from a dir's rows ([[healBloom]]) — and each must match
+    * the probe expression of the twin's operator. */
+  final case class Layout(ddl: String, elems: Seq[Column]) {
+    val schema: StructType = StructType.fromDDL(ddl)
+  }
 
   /** [[StreamPipeline.dedupIndexBatch]] index (`h STRING` content
     * hashes): one element per hash — the probe in
     * [[graft.operators.Dedup.dedupIncremental]] tests
     * xxhash64(content_hash). */
-  def dedupElems(idx: DataFrame): DataFrame =
-    idx.select(xxhash64(col("h")).as("_e"))
+  val dedupLayout: Layout = Layout("h STRING", Seq(xxhash64(col("h"))))
 
   /** [[StreamPipeline.dhashIndexBatch]] index (`h BIGINT` perceptual
     * hashes): the pigeonhole (chunk index, chunk value) keys of
     * [[graft.operators.Dedup.dedupIncrementalHamming]] — maxHamming+1
-    * elements per signature. */
-  def dhashElems(maxHamming: Int)(idx: DataFrame): DataFrame = {
+    * elements per signature, the chunk index an INT as its probe
+    * hashes it. */
+  def dhashLayout(maxHamming: Int): Layout = {
     val chunks = maxHamming + 1
     val bitsPer = 64 / chunks
-    val cs = (0 until chunks).map { i =>
-      shiftrightunsigned(col("h").cast("long"), i * bitsPer)
-        .bitwiseAND(lit((1L << bitsPer) - 1))
-    }
-    idx.select(posexplode(array(cs: _*)))
-      .select(xxhash64(col("pos"), col("col")).as("_e"))
+    Layout("h BIGINT", (0 until chunks).map { i =>
+      xxhash64(lit(i), shiftrightunsigned(col("h").cast("long"), i * bitsPer)
+        .bitwiseAND(lit((1L << bitsPer) - 1)))
+    })
   }
 
-  /** [[StreamPipeline.splitIndexBatch]] index (doc_id, side, hs,
-    * bands): doc ids salted with -1 (the stickiness probe — band
-    * positions are always ≥ 0, so the domains cannot collide) plus
-    * every (band position, band hash) key (the candidate probe). */
-  def splitElems(idx: DataFrame): DataFrame =
-    idx.select(xxhash64(lit(-1), col("doc_id")).as("_e"))
-      .unionAll(idx.select(posexplode(col("bands")))
-        .select(xxhash64(col("pos"), col("col")).as("_e")))
+  /** The split index's row schema (doc_id, side, hs, bands). */
+  val SplitDdl = "doc_id BIGINT, side STRING, hs ARRAY<BIGINT>, bands ARRAY<BIGINT>"
+
+  /** [[StreamPipeline.splitIndexBatch]] index: doc ids salted with -1
+    * (the stickiness probe — band positions are always ≥ 0, so the
+    * domains cannot collide) plus every (band position, band hash) key
+    * (the candidate probe) of the first `bands` positions. The band
+    * count is the twin's, fixed for the index's life: a row's keys past
+    * it would never be probed (band keys of another banding never
+    * match). */
+  def splitLayout(bands: Int): Layout = Layout(SplitDdl,
+    xxhash64(lit(-1), col("doc_id")) +: (0 until bands).map { i =>
+      when(size(col("bands")) > i, xxhash64(lit(i), col("bands")(i)))
+    })
 
   // ---- at-rest postings (the band-key lookup side of the split index) ----
   //
@@ -150,7 +178,7 @@ object IndexState {
   def writePostings(spark: SparkSession, dir: String): Unit = {
     val fan = math.max(sizedFileCount(dataBytes(spark, dir)),
       math.min(PostingsBuckets, spark.sparkContext.defaultParallelism))
-    postingsOf(spark.read.parquet(dir))
+    postingsOf(spark.read.schema(SplitDdl).parquet(dir))
       .repartitionByRange(fan, col("bucket"), col("k"))
       .sortWithinPartitions(col("bucket"), col("k"))
       .write.mode("overwrite").partitionBy("bucket")
@@ -183,19 +211,23 @@ object IndexState {
       if (allBuckets) df else df.filter(col("bucket").isin(buckets: _*))
     val parts = Seq(
       if (withSidecar.nonEmpty)
-        Some(pruned(spark.read.parquet(withSidecar.map(_ + "/" + PostingsDir): _*))
+        Some(pruned(spark.read.schema(PostingsDdl)
+            .parquet(withSidecar.map(_ + "/" + PostingsDir): _*))
           .select(col("b"), col("k"), col("doc_id")))
       else None,
       if (without.nonEmpty)
-        Some(pruned(postingsOf(spark.read.parquet(without: _*)))
+        Some(pruned(postingsOf(spark.read.schema(SplitDdl).parquet(without: _*)))
           .select(col("b"), col("k"), col("doc_id")))
       else None).flatten
     parts.reduceOption(_ unionAll _).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "b INT, k BIGINT, doc_id BIGINT")))
+        StructType.fromDDL("b INT, k BIGINT, doc_id BIGINT")))
   }
+
+  /** The `_postings` sidecar's schema as read back: the [[postingsOf]]
+    * columns with `bucket` as the partition column. */
+  val PostingsDdl = "b INT, k BIGINT, doc_id BIGINT, bucket INT"
 
   /** The probe side of a folded sidecar: true iff `elem` (the same
     * 64-bit expression a derivation above produced) might be in the
@@ -218,24 +250,21 @@ object IndexState {
     * guard against marker-only dirs (the pre-manifest layout). */
   def committedData(spark: SparkSession, stateBase: String): Seq[String] = {
     val gen = StreamPipeline.resolveGen(spark, stateBase)
-    val conf = spark.sparkContext.hadoopConfiguration
-    IdempotentSink.committedDirs(spark, gen).filter { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).listStatus(p)
-        .exists(_.getPath.getName.endsWith(".parquet"))
-    }
+    IdempotentSink.committedDirs(spark, gen)
+      .filter(d => dataFiles(spark, d).nonEmpty)
   }
 
-  /** The committed index as one logical table (empty frame of
-    * `ddlIfEmpty` before the first commit). After compaction this is
-    * one dir plus the batches since — never the full batch history. */
-  def read(spark: SparkSession, stateBase: String, ddlIfEmpty: String): DataFrame = {
+  /** The committed index as one logical table, read with the declared
+    * `ddl` (a twin's [[Layout.ddl]]) — no schema-inference job; an empty
+    * frame of that schema before the first commit. After compaction this
+    * is one dir plus the batches since — never the full batch history. */
+  def read(spark: SparkSession, stateBase: String, ddl: String): DataFrame = {
     val dirs = committedData(spark, stateBase)
+    val schema = StructType.fromDDL(ddl)
     if (dirs.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddlIfEmpty))
-    else spark.read.parquet(dirs: _*)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
   }
 
   /** The folded filter over every committed batch (None before the
@@ -253,8 +282,7 @@ object IndexState {
     * exceeds [[SaturationWarnFpp]] a WARN names the state dir and the
     * fix (re-size via the twin's expectedItems/numBits parameters),
     * so the degradation is visible instead of silent. */
-  def currentBloom(spark: SparkSession, stateBase: String,
-      elems: DataFrame => DataFrame,
+  def currentBloom(spark: SparkSession, stateBase: String, layout: Layout,
       expectedItems: Long, numBits: Long): Option[Array[Byte]] = {
     val dirs = committedData(spark, stateBase)
     if (dirs.isEmpty) return None
@@ -263,7 +291,7 @@ object IndexState {
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(conf)
       readBloom(fs, p).getOrElse(graft.functions.BloomProbe.deserialize(
-        healBloom(spark, fs, p, elems, expectedItems, numBits)))
+        healBloom(spark, fs, p, layout, expectedItems, numBits)))
     }
     val merged =
       try sidecars().reduceLeft(_ mergeInPlace _)
@@ -277,7 +305,7 @@ object IndexState {
             val p = new org.apache.hadoop.fs.Path(d)
             val fs = p.getFileSystem(conf)
             fs.delete(new org.apache.hadoop.fs.Path(p, BloomFile), false)
-            healBloom(spark, fs, p, elems, expectedItems, numBits)
+            healBloom(spark, fs, p, layout, expectedItems, numBits)
           }
           sidecars().reduceLeft(_ mergeInPlace _)
       }
@@ -318,14 +346,14 @@ object IndexState {
 
   // ---- writers ----
 
-  /** Append one batch of index rows under the live generation:
-    * idempotent on the `_SUCCESS` marker (same-batchId replays skip,
-    * healing a torn sidecar if the crash hit that window), sidecar
-    * written right after the data commit, then the
+  /** Append one batch of index rows (`df`, of `layout`'s columns) under
+    * the live generation: idempotent on the `_SUCCESS` marker
+    * (same-batchId replays skip, healing a torn sidecar if the crash hit
+    * that window), sidecar written right after the data commit from the
+    * bloom the write itself observed, then the
     * [[StreamPipeline.foldIfSuperseded]] re-resolve so a concurrent
     * compactor can never orphan this batch. */
-  def append(df: DataFrame, batchId: Long, stateBase: String,
-      elems: DataFrame => DataFrame,
+  def append(df: DataFrame, batchId: Long, stateBase: String, layout: Layout,
       expectedItems: Long, numBits: Long, estBytes: Long = 0L): Unit = {
     val spark = df.sparkSession
     val gen = StreamPipeline.resolveGen(spark, stateBase)
@@ -351,14 +379,17 @@ object IndexState {
       // (the default 32-shuffle-partition plan otherwise lands ~32
       // KB-sized files per batch — measured r19 as the dominant
       // compaction cost and a constant per-batch listing tax).
-      df.repartition(sizedFileCount(estBytes))
-        .write.mode("overwrite").parquet(dir.toString)
-      healBloom(spark, fs, dir, elems, expectedItems, numBits)
+      val files = sizedFileCount(estBytes)
+      val (rows, obs) = observedIfOneTask(inFiles(df, files), files,
+        layout, expectedItems, numBits)
+      rows.write.mode("overwrite").parquet(dir.toString)
+      writeSidecar(spark, fs, dir, obs, layout, expectedItems, numBits)
     } else if (readBloom(fs, dir).isEmpty &&
-        fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
+        dataFiles(spark, dir.toString).nonEmpty) {
       // replay into the sidecar crash window (or a corrupt sidecar
-      // readBloom just quarantined): heal now from this dir's rows.
-      healBloom(spark, fs, dir, elems, expectedItems, numBits)
+      // readBloom just quarantined): no write ran, so nothing was
+      // observed — heal now from this dir's rows.
+      healBloom(spark, fs, dir, layout, expectedItems, numBits)
     }
     StreamPipeline.foldIfSuperseded(spark, stateBase, gen, batchId)
   }
@@ -379,19 +410,13 @@ object IndexState {
     if (dirs.size < 2) false
     else if (dirs.size >= maxDirs) true
     else {
-      val conf = spark.sparkContext.hadoopConfiguration
       // DATA bytes only: the `_bloom` sidecar (tens of KB deflated at
       // the default geometry, never below the empty filter's few KB)
       // and the merged dir's `_postings` would otherwise swamp the
       // comparison at small batch sizes — a 1-row dir reads as "equal"
       // to a 200-row dir once both carry a bloom, and the trigger
       // fires on every tiny tail batch (write amplification)
-      val sizes = dirs.map { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).listStatus(p)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getLen).sum
-      }
+      val sizes = dirs.map(dataBytes(spark, _))
       // 0.9 factor: two batches of the same logical size can differ by
       // a few encoded bytes (dictionary/uuid wobble), and the exact
       // `small >= max` boundary then flips on noise. ≥ 0.9×max still
@@ -410,12 +435,14 @@ object IndexState {
     * protocol verbatim (shared skeleton), so the crash/concurrency
     * analysis there applies unchanged.
     *
-    * The merged sidecar is REBUILT from the merged dir's own rows at
-    * the passed geometry, not OR-folded from the old sidecars: the
-    * data is already being read for the rewrite (the extra aggregate
-    * rides the same scan cost class), and a caller that re-sized
-    * expectedItems/numBits after a saturation warning gets the new
-    * geometry applied here — compaction is the migration point.
+    * The merged sidecar is built from the merged rows at the passed
+    * geometry, not OR-folded from the old sidecars: a one-file rewrite
+    * observes it on its own write (no second read of the merged dir), a
+    * multi-file one aggregates the merged dir once, and a caller
+    * that re-sized expectedItems/numBits after a saturation warning
+    * gets the new geometry applied here — compaction is the migration
+    * point. The input dirs are read with the declared `layout.ddl` and
+    * sized by their data files only ([[dataBytes]]).
     *
     * Heal-cost note (the one heal NOT single-batch bounded): a crash
     * in the window between the merged dir's data commit and its
@@ -426,56 +453,69 @@ object IndexState {
     * rows: bounded by the COMPACTED corpus, i.e. one compaction's own
     * read cost, once — not per batch (IndexStateSpec pins the heal).
     *
-    * `shape` re-shapes the merged frame before the write — (frame,
-    * total input bytes) → frame — so a caller can size the output
-    * files and impose a sort order the probe side prunes on (the
+    * `shape` lays the merged frame out before the write as the given
+    * number of write partitions, one file each — (frame, files) →
+    * frame, exactly that many partitions, since a one-partition layout
+    * is what lets the write observe the sidecar — so a caller can
+    * impose a sort order the probe side prunes on (the
     * split twin range-partitions by doc_id: parquet page/row-group
     * min/max stats then skip the wide `hs` decode outside a probe's
-    * doc-id bounds). Default: one file per ~32 MiB of input, which
-    * also ends the many-tiny-files merge the per-batch appends used
-    * to compound. `extraMergedWrite` runs against the merged dir
+    * doc-id bounds). The file count is one per ~32 MiB of input
+    * ([[sizedFileCount]]), which also ends the many-tiny-files merge
+    * the per-batch appends used to compound; the default layout is
+    * [[inFiles]]. `extraMergedWrite` runs against the merged dir
     * after the bloom sidecar (before the manifest/pointer swap, so a
     * crash discards the half-built generation — the compactState
     * contract); the split twin writes its `_postings` sidecar there. */
-  def compact(spark: SparkSession, stateBase: String,
-      elems: DataFrame => DataFrame,
+  def compact(spark: SparkSession, stateBase: String, layout: Layout,
       expectedItems: Long, numBits: Long, attempts: Int = 3,
-      shape: (DataFrame, Long) => DataFrame =
-        (df, bytes) => df.repartition(sizedFileCount(bytes)),
-      extraMergedWrite: (SparkSession, String) => Unit = (_, _) => ()): Unit =
+      shape: (DataFrame, Int) => DataFrame = inFiles,
+      extraMergedWrite: (SparkSession, String) => Unit = (_, _) => ()): Unit = {
+    // the observation of the latest merge attempt (a writer-race retry
+    // builds a new merged frame, so a new observation); compactState
+    // writes every attempt into a fresh generation, so the write runs
+    var obs: Option[Observation] = None
     StreamPipeline.compactState(spark, stateBase, attempts)(
       dirs => {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val data = dirs.filter { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          p.getFileSystem(conf)
-            .listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-        }
-        val bytes = data.map { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          p.getFileSystem(conf).getContentSummary(p).getLength
-        }.sum
-        shape(spark.read.parquet(data: _*), bytes)
+        val data = dirs.map(d => d -> dataBytes(spark, d)).filter(_._2 > 0)
+        val files = sizedFileCount(data.map(_._2).sum)
+        val (rows, o) = observedIfOneTask(
+          shape(spark.read.schema(layout.schema).parquet(data.map(_._1): _*), files),
+          files, layout, expectedItems, numBits)
+        obs = o
+        rows
       })(
       (fs, mergedDir, _) => {
-        writeBloom(fs, mergedDir, buildBloom(
-          elems(spark.read.parquet(mergedDir.toString)),
-          expectedItems, numBits))
+        writeSidecar(spark, fs, mergedDir, obs, layout, expectedItems, numBits)
         extraMergedWrite(spark, mergedDir.toString)
       })
+  }
 
   /** File count for a merged write: one per ~32 MiB of input data. */
   def sizedFileCount(bytes: Long): Int =
     math.max(1L, bytes / (32L * 1024 * 1024)).toInt
 
+  /** `df` as `n` write partitions, one file each. One file is a
+    * coalesce: the rows a one-partition shuffle would gather, without
+    * that shuffle's map-stage job (an appended batch or a small merge is
+    * already one or a few partitions, and under 64 MiB by the sizing
+    * above). More files take a round-robin repartition, which balances
+    * them. */
+  def inFiles(df: DataFrame, n: Int): DataFrame =
+    if (n == 1) df.coalesce(1) else df.repartition(n)
+
   /** Committed DATA bytes of one dir (top-level `*.parquet` only —
-    * `_bloom`/`_postings` sidecars excluded), the byte estimate
-    * size-aware writes key on. */
-  def dataBytes(spark: SparkSession, dir: String): Long = {
+    * `_bloom`/`_postings` sidecars and checksum files excluded), the
+    * byte estimate size-aware writes and the compaction trigger key on. */
+  def dataBytes(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).map(_.getLen).sum
+
+  /** One listing of a dir's top-level `*.parquet` files. */
+  private def dataFiles(spark: SparkSession,
+      dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
   }
 
   // ---- bloom plumbing ----
@@ -484,17 +524,81 @@ object IndexState {
     * distributed, one pass, bounded bytes to the driver. An empty
     * frame yields the EMPTY filter at the same geometry (the
     * aggregate's null) so sidecars always merge. */
-  def buildBloom(elems: DataFrame, expectedItems: Long, numBits: Long): Array[Byte] = {
+  def buildBloom(elems: DataFrame, expectedItems: Long, numBits: Long): Array[Byte] =
+    orFilters(Seq(elems.select(bloomAgg(col("_e"), expectedItems, numBits))
+      .head().getAs[Array[Byte]](0)), expectedItems, numBits)
+
+  private def bloomAgg(elem: Column, expectedItems: Long, numBits: Long): Column = {
     import org.apache.spark.sql.graft.shim
-    val bytes = elems.select(shim.column(
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          shim.expression(col("_e")),
-          shim.expression(lit(expectedItems)), shim.expression(lit(numBits)))
-          .toAggregateExpression()).as("_bf"))
-      .head().getAs[Array[Byte]]("_bf")
-    if (bytes != null) bytes
-    else serialize(BloomFilter.create(expectedItems, numBits))
+    shim.column(
+      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+        shim.expression(elem),
+        shim.expression(lit(expectedItems)), shim.expression(lit(numBits)))
+        .toAggregateExpression())
   }
+
+  /** OR of per-element-expression filters of one geometry: a null (the
+    * aggregate saw no element) adds nothing, all null is the EMPTY
+    * filter. The OR is exact — the bits of a union are the OR of the
+    * bits — so it equals one aggregate over every element. */
+  private def orFilters(parts: Seq[Array[Byte]],
+      expectedItems: Long, numBits: Long): Array[Byte] =
+    parts.filter(_ != null) match {
+      case Seq() => serialize(BloomFilter.create(expectedItems, numBits))
+      case Seq(one) => one
+      case many => mergeBlooms(many).get
+    }
+
+  /** `laidOut` (already laid out as `files` write partitions) with one
+    * bloom aggregate per `layout` element observed on it when that write
+    * is ONE task: the action that writes it fills the Observation in its
+    * own jobs. Every task of an observed write sends the driver one
+    * numBits/8 buffer per element expression as an accumulator update,
+    * and those count toward `spark.driver.maxResultSize` (1 GiB by
+    * default): one task keeps that at one buffer per element whatever
+    * the index size, while a merge of one task per 32 MiB would pass the
+    * limit at ~112 tasks for the nine-element split layout and abort
+    * every retry of the compaction. A multi-file write therefore
+    * observes nothing (None) and its sidecar is built by [[healBloom]]'s
+    * one aggregate over the written rows, whose partial filters reach a
+    * single reducer by shuffle. */
+  private def observedIfOneTask(laidOut: DataFrame, files: Int, layout: Layout,
+      expectedItems: Long, numBits: Long): (DataFrame, Option[Observation]) =
+    if (files != 1) (laidOut, None)
+    else {
+      val obs = Observation()
+      val aggs = layout.elems.zipWithIndex.map { case (e, i) =>
+        bloomAgg(e, expectedItems, numBits).as(s"_bf$i")
+      }
+      (laidOut.observe(obs, aggs.head, aggs.tail: _*), Some(obs))
+    }
+
+  /** Write `dir`'s sidecar after its data commit: the filter its write
+    * observed, or, for a write that observed nothing, [[healBloom]]'s
+    * rebuild from the written rows. An observation is awaited only after
+    * the write that fills it ran. Its metrics reach the driver through
+    * the listener bus; if they have not arrived within [[ObservedWait]]
+    * this fails loudly rather than stalling every batch: the rows are
+    * committed without a sidecar, so a replay of the batch heals it
+    * from them and a retried compaction starts a fresh generation. */
+  private def writeSidecar(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+      obs: Option[Observation], layout: Layout,
+      expectedItems: Long, numBits: Long): Unit = obs match {
+    case None => healBloom(spark, fs, dir, layout, expectedItems, numBits)
+    case Some(o) =>
+      val row =
+        try scala.concurrent.Await.result(o.future, ObservedWait)
+        catch {
+          case e: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(s"the bloom observed on the " +
+              s"write of $dir did not arrive within $ObservedWait", e)
+        }
+      writeBloom(fs, dir, orFilters((0 until row.length).map(row.getAs[Array[Byte]]),
+        expectedItems, numBits))
+  }
+
+  private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
 
   /** OR-fold serialized filters (same geometry by construction —
     * incompatible inputs fail loudly in mergeInPlace, never merge
@@ -510,13 +614,17 @@ object IndexState {
     bos.toByteArray
   }
 
-  /** Rebuild one dir's sidecar from its own rows (bounded: one batch)
-    * and persist it best-effort — the losing writer of a concurrent
-    * heal sees the rename fail and keeps its identical bytes. */
-  private def healBloom(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, elems: DataFrame => DataFrame,
-      expectedItems: Long, numBits: Long): Array[Byte] = {
-    val bytes = buildBloom(elems(spark.read.parquet(dir.toString)),
+  /** Rebuild one dir's sidecar from its own rows, read with the
+    * declared schema, as ONE aggregate over every element of every row —
+    * the path for a replay whose marker already exists, a missing or
+    * corrupt sidecar, and a multi-file write (which observes nothing) —
+    * and persist it best-effort: the losing writer of a concurrent heal sees
+    * the rename fail and keeps its identical bytes. */
+  private[streaming] def healBloom(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+      layout: Layout, expectedItems: Long, numBits: Long): Array[Byte] = {
+    val bytes = buildBloom(spark.read.schema(layout.schema).parquet(dir.toString)
+        .select(explode(array(layout.elems: _*)).as("_e")),
       expectedItems, numBits)
     writeBloom(fs, dir, bytes)
     bytes

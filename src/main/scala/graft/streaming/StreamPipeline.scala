@@ -297,7 +297,17 @@ object StreamPipeline {
     * set forever. Reads still go through committed (_SUCCESS-marked)
     * dirs only — a torn batch=N left by a crash mid index-write must
     * stay invisible to the replay ([[IndexState.read]] preserves
-    * exactly the r14 torn-batch contract). */
+    * exactly the r14 torn-batch contract).
+    *
+    * Fixed cost per batch, in Spark jobs: one narrow zero-positive
+    * probe, the survivors write (with the anti-join when the probe
+    * found a positive) and the index append — 5 jobs on the benchmark
+    * batch shape, 6 when the batch compacts (StreamPipelineSpec holds
+    * both budgets). Nothing is recomputed: every read is declared
+    * ([[IndexState.dedupLayout]]), never inferred, each sidecar is
+    * observed on the write of its rows rather than re-aggregated, and
+    * a one-file index write coalesces instead of shuffling
+    * ([[IndexState.inFiles]]). */
   def dedupIndexBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String,
       outBase: String, indexBase: String, maxIndexDirs: Int = 64,
@@ -306,25 +316,27 @@ object StreamPipeline {
     val spark = batch.sparkSession
     val clock = new PhaseClock("dedup")
     import clock.timed
-    val index = IndexState.read(spark, indexBase, "h STRING")
+    val layout = IndexState.dedupLayout
+    val index = IndexState.read(spark, indexBase, layout.ddl)
     val bloom = timed("fold")(IndexState.currentBloom(spark, indexBase,
-      IndexState.dedupElems, bloomItems, bloomBits))
+      layout, bloomItems, bloomBits))
     val survivors = graft.operators.Dedup
       .dedupIncremental(batch, idCol, textCol, index, "h",
         bloomItems, bloomBits, precomputedBloom = bloom)
     timed("write")(IdempotentSink.writeBatch(outBase)(survivors, batchId))
     // index rows from the COMMITTED output, not the live plan — the
-    // survivors DAG would otherwise evaluate twice per batch; the
+    // survivors DAG would otherwise evaluate twice per batch — read
+    // with the schema that write used (no inference job); the
     // committed dir's bytes bound the index append's file sizing
     val outDir = s"$outBase/batch=$batchId"
     timed("append")(IndexState.append(
-      spark.read.parquet(outDir).select(col("content_hash").as("h")),
-      batchId, indexBase, IndexState.dedupElems, bloomItems, bloomBits,
+      spark.read.schema(survivors.schema).parquet(outDir)
+        .select(col("content_hash").as("h")),
+      batchId, indexBase, layout, bloomItems, bloomBits,
       estBytes = IndexState.dataBytes(spark, outDir)))
     timed("compact")(
       if (IndexState.shouldCompact(spark, indexBase, maxIndexDirs))
-        IndexState.compact(spark, indexBase, IndexState.dedupElems,
-          bloomItems, bloomBits))
+        IndexState.compact(spark, indexBase, layout, bloomItems, bloomBits))
     clock.publish(indexBase, batchId)
   }
 
@@ -377,9 +389,10 @@ object StreamPipeline {
     val spark = batch.sparkSession
     val clock = new PhaseClock("dhash")
     import clock.timed
-    val index = IndexState.read(spark, indexBase, "h BIGINT")
+    val layout = IndexState.dhashLayout(maxHamming)
+    val index = IndexState.read(spark, indexBase, layout.ddl)
     val bloom = timed("fold")(IndexState.currentBloom(spark, indexBase,
-      IndexState.dhashElems(maxHamming), bloomItems, bloomBits))
+      layout, bloomItems, bloomBits))
     val sigs = hasher(batch, idCol)
     val survivors = graft.operators.Dedup.dedupIncrementalHamming(
       sigs, idCol, "dhash", index, "h", maxHamming,
@@ -387,18 +400,17 @@ object StreamPipeline {
     timed("write")(IdempotentSink.writeBatch(outBase)(survivors, batchId))
     // index rows from the COMMITTED output, not the live plan — the
     // survivors DAG (decode + hash + banded join) would otherwise
-    // evaluate twice per batch; the committed dir's bytes bound the
-    // index append's file sizing
+    // evaluate twice per batch — read with the schema that write used;
+    // the committed dir's bytes bound the index append's file sizing
     val outDir = s"$outBase/batch=$batchId"
     timed("append")(IndexState.append(
-      spark.read.parquet(outDir).select(col("dhash").as("h")),
-      batchId, indexBase, IndexState.dhashElems(maxHamming),
-      bloomItems, bloomBits,
+      spark.read.schema(survivors.schema).parquet(outDir)
+        .select(col("dhash").as("h")),
+      batchId, indexBase, layout, bloomItems, bloomBits,
       estBytes = IndexState.dataBytes(spark, outDir)))
     timed("compact")(
       if (IndexState.shouldCompact(spark, indexBase, maxIndexDirs))
-        IndexState.compact(spark, indexBase, IndexState.dhashElems(maxHamming),
-          bloomItems, bloomBits))
+        IndexState.compact(spark, indexBase, layout, bloomItems, bloomBits))
     clock.publish(indexBase, batchId)
   }
 
@@ -470,10 +482,10 @@ object StreamPipeline {
     val spark = batch.sparkSession
     val clock = new PhaseClock("split")
     import clock.timed
-    lazy val index = IndexState.read(spark, indexBase,
-      "doc_id BIGINT, side STRING, hs ARRAY<BIGINT>, bands ARRAY<BIGINT>")
+    val layout = IndexState.splitLayout(bands)
+    lazy val index = IndexState.read(spark, indexBase, layout.ddl)
     val bloom = timed("fold")(IndexState.currentBloom(spark, indexBase,
-      IndexState.splitElems, bloomItems, bloomBits))
+      layout, bloomItems, bloomBits))
     // Per-doc stickiness (r16 advice): a doc_id re-delivered in a LATER
     // batch (different batchId, so the idempotency marker cannot catch
     // it — e.g. the upstream source replays a range) must keep its
@@ -683,15 +695,15 @@ object StreamPipeline {
       sided.repartition(IndexState.sizedFileCount(batchRows * 64L)),
       batchId))
     timed("append")(IndexState.append(
-      spark.read.parquet(s"$outBase/batch=$batchId")
+      spark.read.schema(sided.schema).parquet(s"$outBase/batch=$batchId")
         .select(col("doc_id"), col("side"))
         .join(bsig, Seq("doc_id"))
         .select(col("doc_id"), col("side"), col("hs"), col("bands")),
-      batchId, indexBase, IndexState.splitElems,
+      batchId, indexBase, layout,
       bloomItems, bloomBits, estBytes = batchRows * 400L))
     timed("compact")(
       if (IndexState.shouldCompact(spark, indexBase, maxIndexDirs))
-        IndexState.compact(spark, indexBase, IndexState.splitElems,
+        IndexState.compact(spark, indexBase, layout,
           bloomItems, bloomBits,
           // merged dir doc_id-SORTED in size-targeted files (parquet
           // page/row-group stats then serve the probe's doc-id range
@@ -699,9 +711,8 @@ object StreamPipeline {
           // sidecar the candidate probe partition-prunes; the sidecar
           // write is clocked apart so the artifact rows attribute the
           // compaction's data-vs-postings split (VERDICT r19 item 2)
-          shape = (df, bytes) => df
-            .repartitionByRange(IndexState.sizedFileCount(bytes),
-              col("doc_id"))
+          shape = (df, files) => df
+            .repartitionByRange(files, col("doc_id"))
             .sortWithinPartitions(col("doc_id")),
           extraMergedWrite = (s, dir) =>
             timed("postings")(IndexState.writePostings(s, dir))))

@@ -16,18 +16,34 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Runs `f` under a fresh job group and returns its result with the
-    * descriptions of the Spark jobs it started (call sites). */
+    * descriptions of the Spark jobs it started (call sites). A job
+    * started for a SQL action from another thread (an adaptive query
+    * stage, a broadcast) carries that thread's call site, so the
+    * action's own call site follows it in brackets. */
   def withJobs[A](f: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            actions.put(s.executionId.toString, s.description)
+          case _ =>
+        }
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.maxBy(_.stageId).name) // the result stage's call site
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val site = e.stageInfos.maxBy(_.stageId).name // the result stage's call site
+          val action = Option(e.properties.getProperty("spark.sql.execution.id"))
+            .flatMap(id => Option(actions.get(id))).filter(_ != site)
+          jobs.add(action.fold(site)(a => s"$site [$a]"))
+        }
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, group, interruptOnCancel = false)
+    // no group description: a SQL action would take it as its own
+    // description in place of its call site
+    sc.setJobGroup(group, null, interruptOnCancel = false)
     try {
       val out = f
       org.apache.spark.ListenerDrain(sc)

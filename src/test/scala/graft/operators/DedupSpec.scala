@@ -196,6 +196,43 @@ class DedupSpec extends SparkSpec {
     assert(noIdx == Set(10L, 11L, 13L), s"empty-index got $noIdx")
   }
 
+  test("dedupIncremental: duplicate index hashes change no survivor; a zero-positive streaming batch never reads the index") {
+    def hashes(ts: String*) = ts.toDF("t").select(md5(T.normalizeText(col("t"))).as("h"))
+    val index = hashes("alpha body text", "beta body text")
+    val repeated = index.unionAll(index).unionAll(hashes("alpha body text"))
+    val batch = Seq(
+      (10L, "ALPHA   body TEXT"), // indexed content → drop
+      (11L, "gamma body text"),
+      (12L, "Gamma BODY text"),   // within-batch dup of 11 → drop
+      (13L, "delta body text")
+    ).toDF("doc_id", "text")
+    def bloomOf(idx: org.apache.spark.sql.DataFrame) =
+      graft.streaming.IndexState.buildBloom(
+        idx.select(xxhash64(col("h")).as("_e")), 1000000L, 1L << 23)
+    // batch path (bloom aggregated from the index), streaming path
+    // (precomputed bloom) and a collision-heavy filter (every hash
+    // positive, so the anti-join alone decides)
+    for ((tag, run) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "batch" -> (i => Dedup.dedupIncremental(batch, "doc_id", "text", i, "h")),
+        "streaming" -> (i => Dedup.dedupIncremental(batch, "doc_id", "text", i, "h",
+          precomputedBloom = Some(bloomOf(index)))),
+        "tiny" -> (i => Dedup.dedupIncremental(batch, "doc_id", "text", i, "h",
+          expectedItems = 2L, numBits = 64L)))) {
+      assertSameRows(run(repeated), run(index), tag)
+      assert(run(repeated).select("doc_id").as[Long].collect().toSet == Set(11L, 13L), tag)
+    }
+    // zero positives: the batch's keepers come back without the index
+    // being evaluated at all — an index that throws when read proves it
+    val unreadable = index.select(
+      udf((h: String) => { if (h != null) throw new IllegalStateException("index read"); h })
+        .apply(col("h")).as("h"))
+    val fresh = batch.filter(col("doc_id") =!= 10L)
+    val kept = Dedup.dedupIncremental(fresh, "doc_id", "text", unreadable, "h",
+      precomputedBloom = Some(bloomOf(index)))
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(11L, 13L), s"got $kept")
+  }
+
   test("dedupIncrementalHamming: within-batch keepers + Hamming-ball index drops, exact under tiny bloom") {
     // index holds signature 0xF0; batch: id 20 within 1 bit of the index
     // (→ drop), ids 21/22 within 1 bit of each other (→ keeper 21),

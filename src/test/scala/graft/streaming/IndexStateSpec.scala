@@ -90,8 +90,7 @@ class IndexStateSpec extends SparkSpec {
 
   test("shouldCompact: geometric trigger and fan-in cap") {
     val base = tmp("pol") + "/state"
-    val elems = (idx: org.apache.spark.sql.DataFrame) =>
-      idx.select(xxhash64(col("h").cast("string")).as("_e"))
+    val elems = IndexState.Layout("h BIGINT", Seq(xxhash64(col("h").cast("string"))))
     assert(!IndexState.shouldCompact(spark, base), "empty state never compacts")
     IndexState.append((1L to 100L).toDF("h"), 0L, base, elems, 1000L, 1L << 16)
     assert(!IndexState.shouldCompact(spark, base), "one dir never compacts")
@@ -230,7 +229,7 @@ class IndexStateSpec extends SparkSpec {
     // the dense form at the default geometry is 1,048,592 bytes
     val bloomFile = new java.io.File(s"$idx/batch=0/_bloom")
     assert(bloomFile.length() < 64 * 1024, s"sidecar is ${bloomFile.length()} B")
-    val folded = IndexState.currentBloom(spark, idx, IndexState.dedupElems,
+    val folded = IndexState.currentBloom(spark, idx, IndexState.dedupLayout,
       StreamPipeline.IndexBloomItems, StreamPipeline.IndexBloomBits).get
     assert(folded.length == 1048592, s"the fold hands back dense bytes: ${folded.length}")
     val raw = java.nio.file.Files.readAllBytes(bloomFile.toPath)
@@ -240,8 +239,7 @@ class IndexStateSpec extends SparkSpec {
 
   test("a dense sidecar from before the deflated layout folds as-is, with no heal, like its deflated form") {
     val base = tmp("dense") + "/state"
-    val elems = (idx: org.apache.spark.sql.DataFrame) =>
-      idx.select(xxhash64(col("h").cast("string")).as("_e"))
+    val elems = IndexState.Layout("h BIGINT", Seq(xxhash64(col("h").cast("string"))))
     IndexState.append((1L to 100L).toDF("h"), 0L, base, elems, 1000L, 1L << 16)
     IndexState.append((101L to 200L).toDF("h"), 1L, base, elems, 1000L, 1L << 16)
     val bloomFile = new java.io.File(s"$base/batch=0/_bloom")
@@ -275,8 +273,7 @@ class IndexStateSpec extends SparkSpec {
 
   test("geometry re-size mid-stream: incompatible sidecars migrate on the next fold") {
     val base = tmp("geo") + "/state"
-    val elems = (idx: org.apache.spark.sql.DataFrame) =>
-      idx.select(xxhash64(col("h").cast("string")).as("_e"))
+    val elems = IndexState.Layout("h BIGINT", Seq(xxhash64(col("h").cast("string"))))
     IndexState.append((1L to 50L).toDF("h"), 0L, base, elems, 1000L, 1L << 16)
     IndexState.append((51L to 100L).toDF("h"), 1L, base, elems, 1000L, 1L << 16)
     // the caller re-sizes after a saturation warning; at-rest sidecars
@@ -342,12 +339,12 @@ class IndexStateSpec extends SparkSpec {
       .withColumn("bands", T.bandHashes(T.minhashSignature(col("hs"), 32), 32, 8))
       .select("doc_id", "side", "hs", "bands")
     IndexState.append(docsOf(0 until 30), 0L, idx,
-      IndexState.splitElems, 1000L, 1L << 16)
+      IndexState.splitLayout(8), 1000L, 1L << 16)
     IndexState.append(docsOf(30 until 60), 1L, idx,
-      IndexState.splitElems, 1000L, 1L << 16)
-    IndexState.compact(spark, idx, IndexState.splitElems, 1000L, 1L << 16,
-      shape = (df, bytes) => df
-        .repartitionByRange(IndexState.sizedFileCount(bytes), col("doc_id"))
+      IndexState.splitLayout(8), 1000L, 1L << 16)
+    IndexState.compact(spark, idx, IndexState.splitLayout(8), 1000L, 1L << 16,
+      shape = (df, files) => df
+        .repartitionByRange(files, col("doc_id"))
         .sortWithinPartitions(col("doc_id")),
       extraMergedWrite = (s, dir) => IndexState.writePostings(s, dir))
     val dataDirs = IndexState.committedData(spark, idx)
@@ -419,6 +416,185 @@ class IndexStateSpec extends SparkSpec {
     val got = spark.read.parquet(out).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("side")).toMap
     assert(got(300L) == "train", s"legacy merged dir must still match: $got")
+  }
+
+  // the three twins' index rows, two small batches of each
+  private def splitRows(ids: Range) = {
+    import graft.functions.{TextFunctions => T}
+    ids.map(i => (i.toLong, (0 until 40).map(j => s"g${i}w$j").mkString(" "),
+        if (i % 2 == 0) "train" else "test"))
+      .toDF("doc_id", "text", "side")
+      .select(col("doc_id"), col("side"), T.shingleHashes(col("text"), 3).as("hs"))
+      .withColumn("bands", T.bandHashes(T.minhashSignature(col("hs"), 32), 32, 8))
+      .select("doc_id", "side", "hs", "bands")
+  }
+  private def twinRows: Seq[(String, IndexState.Layout, Int => org.apache.spark.sql.DataFrame)] = Seq(
+    ("dedup", IndexState.dedupLayout,
+      b => (0 until 50).map(i => s"hash-$b-$i").toDF("t").select(md5(col("t")).as("h"))),
+    ("dhash", IndexState.dhashLayout(3),
+      b => (0 until 50).map(i => (b * 1000L + i) * 0x9E3779B97F4A7C15L).toDF("h")),
+    ("split", IndexState.splitLayout(8), b => splitRows(b * 50 until b * 50 + 30)))
+
+  test("declared index schemas equal the schemas Spark infers from an appended and a compacted dir") {
+    // a declared read never infers, so a DDL that drifted from what the
+    // twins write would read a missing column as null — each twin's
+    // batch function lands the state checked here
+    import org.apache.spark.sql.types.StructType
+    def inferred(dir: String) = spark.read.parquet(dir).schema
+    def check(tag: String, idx: String, ddl: String, run: (Long, Int) => Unit): Unit = {
+      run(0L, Int.MaxValue)
+      val appended = IndexState.committedData(spark, idx)
+      assert(appended.size == 1 && appended.head.endsWith("batch=0"), s"$tag: $appended")
+      assert(inferred(appended.head) == StructType.fromDDL(ddl), s"$tag appended")
+      run(1L, 2)
+      val merged = IndexState.committedData(spark, idx)
+      assert(merged.size == 1 && merged.head.contains("/gen-"), s"$tag: $merged")
+      assert(inferred(merged.head) == StructType.fromDDL(ddl), s"$tag compacted")
+    }
+    val text = (b: Long) => Seq((b * 10, s"schema body $b"), (b * 10 + 1, s"other body $b"))
+      .toDF("doc_id", "text")
+    val dd = tmp("sch-dedup")
+    check("dedup", s"$dd/index", IndexState.dedupLayout.ddl, (b, maxDirs) =>
+      StreamPipeline.dedupIndexBatch(text(b), b, "doc_id", "text", s"$dd/out",
+        s"$dd/index", maxIndexDirs = maxDirs))
+    val dh = tmp("sch-dhash")
+    check("dhash", s"$dh/index", IndexState.dhashLayout(3).ddl, (b, maxDirs) =>
+      StreamPipeline.dhashIndexBatch(graft.operators.Multimodal.synthesizeNearDupImages(
+          Seq(b * 10).toDF("doc_id"), "doc_id"), b, "doc_id", s"$dh/out", s"$dh/index",
+        3, maxIndexDirs = maxDirs))
+    val sp = tmp("sch-split")
+    check("split", s"$sp/index", IndexState.SplitDdl, (b, maxDirs) =>
+      StreamPipeline.splitIndexBatch(
+        Seq((b * 10, (0 until 40).map(i => s"s${b}w$i").mkString(" "))).toDF("doc_id", "text"),
+        b, "doc_id", "text", s"$sp/out", s"$sp/index", maxIndexDirs = maxDirs))
+    val postings = IndexState.committedData(spark, s"$sp/index").head + "/_postings"
+    assert(inferred(postings) == StructType.fromDDL(IndexState.PostingsDdl),
+      "split _postings")
+  }
+
+  test("an observed sidecar equals healBloom's rebuild of the same dir, byte for byte") {
+    val (items, bits) = (1000L, 1L << 16)
+    def dense(dir: String) = {
+      val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(
+        new java.io.File(new java.net.URI(dir).getPath, "_bloom")))
+      try in.readAllBytes() finally in.close()
+    }
+    // which path built a sidecar: healBloom's aggregate is the one
+    // `head` action in IndexState, and an observed sidecar runs none
+    def heals(jobs: Seq[String]) = jobs.exists(_.contains("head at IndexState.scala"))
+    for ((tag, layout, rows) <- twinRows) {
+      val base = tmp(s"obs-$tag") + "/state"
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def healed(dir: String) = IndexState.healBloom(spark, fs,
+        new org.apache.hadoop.fs.Path(dir), layout, items, bits)
+      def sameBytes(dir: String, what: String): Array[Byte] = {
+        val observed = dense(dir)
+        assert(java.util.Arrays.equals(observed, healed(dir)), s"$tag $what")
+        observed
+      }
+      def append(df: org.apache.spark.sql.DataFrame, id: Long, estBytes: Long = 0L) =
+        withJobs(IndexState.append(df, id, base, layout, items, bits, estBytes))._2
+      def observedPath(jobs: Seq[String], what: String): Unit =
+        assert(!heals(jobs), s"$tag $what: the sidecar was rebuilt, not observed:\n" +
+          jobs.mkString("\n"))
+      // a normal batch
+      observedPath(append(rows(0), 0L), "normal batch")
+      val dir0 = IndexState.committedData(spark, base).head
+      val normal = sameBytes(dir0, "normal batch")
+      // an empty batch observes null: the empty filter
+      observedPath(append(rows(1).filter(lit(false)), 1L), "empty batch")
+      val dir1 = s"${new java.io.File(dir0).getParent}/batch=1"
+      val empty = sameBytes(dir1, "empty batch")
+      assert(IndexState.saturation(empty) == 0.0, s"$tag: empty filter")
+      // a replay whose marker exists writes nothing and observes
+      // nothing, yet heals a lost sidecar to the observed bytes
+      val files0 = new java.io.File(new java.net.URI(dir0).getPath).list().toSet
+      assert(new java.io.File(new java.net.URI(dir0).getPath, "_bloom").delete())
+      assert(heals(append(rows(0), 0L)), s"$tag: the replay must heal")
+      assert(java.util.Arrays.equals(dense(dir0), normal), s"$tag replay heal")
+      assert(new java.io.File(new java.net.URI(dir0).getPath).list().toSet == files0,
+        s"$tag: a replay must not rewrite the dir")
+      // a two-file write observes nothing (one filter per task would
+      // reach the driver) and builds its sidecar from the written rows
+      assert(heals(append(rows(2), 2L, estBytes = 64L * 1024 * 1024)),
+        s"$tag: a two-file batch must build its sidecar by aggregate")
+      val dir2 = s"${new java.io.File(dir0).getParent}/batch=2"
+      assert(new java.io.File(new java.net.URI(dir2).getPath).list()
+        .count(_.endsWith(".parquet")) == 2, s"$tag: two files")
+      sameBytes(dir2, "two-file batch")
+      // a merged dir
+      observedPath(withJobs(IndexState.compact(spark, base, layout, items, bits))._2,
+        "merged dir")
+      val merged = IndexState.committedData(spark, base)
+      assert(merged.size == 1, s"$tag: $merged")
+      sameBytes(merged.head, "merged dir")
+    }
+  }
+
+  test("a multi-file merge sends the driver no bloom per write task") {
+    // every task of an observed write sends the driver one numBits/8
+    // buffer per element expression, and task results count toward
+    // spark.driver.maxResultSize: observed on a merge of one task per
+    // 32 MiB, that would abort compactions of a large index. Two ~45 MiB
+    // split batches merge into two files; the driver may receive the
+    // one filter of the aggregate that builds the merged sidecar, and
+    // small task results, but not nine filters per write task
+    val sc = spark.sparkContext
+    val root = tmp("multi")
+    val base = s"$root/state"
+    val (items, bits) = (100000L, 1L << 22) // 512 KiB filters
+    val layout = IndexState.splitLayout(8)
+    def rows(from: Long, n: Long) = spark.range(from, from + n).select(
+      col("id").as("doc_id"), lit("train").as("side"),
+      transform(sequence(lit(0), lit(31)), j => xxhash64(col("id"), j)).as("hs"),
+      transform(sequence(lit(0), lit(7)), j => xxhash64(j, col("id"))).as("bands"))
+    try {
+      IndexState.append(rows(0L, 140000L), 0L, base, layout, items, bits)
+      IndexState.append(rows(140000L, 140000L), 1L, base, layout, items, bits)
+      val bytes = IndexState.committedData(spark, base)
+        .map(IndexState.dataBytes(spark, _)).sum
+      assert(IndexState.sizedFileCount(bytes) >= 2, s"only $bytes B of data")
+      // the serialized task results of the compaction's jobs: the bytes
+      // maxResultSize limits
+      val group = s"multi-${java.util.UUID.randomUUID()}"
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val resultBytes = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            e.stageIds.foreach(stages.add)
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (stages.contains(e.stageId) && e.taskMetrics != null)
+            resultBytes.addAndGet(e.taskMetrics.resultSize)
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, null, interruptOnCancel = false)
+      try {
+        IndexState.compact(spark, base, layout, items, bits,
+          shape = (df, files) => df.repartitionByRange(files, col("doc_id"))
+            .sortWithinPartitions(col("doc_id")))
+        org.apache.spark.ListenerDrain(sc)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      val merged = IndexState.committedData(spark, base)
+      assert(merged.size == 1, s"$merged")
+      val files = new java.io.File(new java.net.URI(merged.head).getPath).list()
+        .count(_.endsWith(".parquet"))
+      assert(files >= 2, s"the merge wrote $files file(s)")
+      assert(resultBytes.get < 2 * bits / 8, s"the compaction sent the driver " +
+        s"${resultBytes.get} B of task results for a ${bits / 8} B filter")
+      // the merged sidecar still gates every doc
+      val bloom = IndexState.currentBloom(spark, base, layout, items, bits).get
+      assert(spark.range(0L, 280000L, 97L)
+        .filter(!IndexState.mightContain(bloom, xxhash64(lit(-1), col("id"))))
+        .isEmpty, "a merged doc id must probe positive")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+    }
   }
 
   test("compacted-id manifest: v1 sentinel detects truncation; legacy header-less accepted") {

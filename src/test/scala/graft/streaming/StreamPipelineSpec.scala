@@ -365,6 +365,39 @@ class StreamPipelineSpec extends SparkSpec {
       s"gamma's replayed hash must suppress doc 5: $survivors")
   }
 
+  test("dedupIndexBatch job budget: at most 5 Spark jobs per plain batch, 6 per compacting one") {
+    // each job costs tens of ms of driver time whatever it does, and a
+    // micro-batch is mostly that fixed cost; 2,000-doc batches, each
+    // repeating the content of a fifth of the previous batch's docs so
+    // the bloom-positive anti-join runs — the stream_dedup benchmark's
+    // shape
+    val dir = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val (out, idx) = (s"$dir/out", s"$dir/index")
+    val (perBatch, nDup) = (2000, 400)
+    def docsFor(b: Int) = {
+      val base = b.toLong * perBatch
+      val cid = if (b == 0) col("id") + lit(base)
+        else when(col("id") < nDup, lit(base - perBatch + nDup) + col("id"))
+          .otherwise(col("id") + lit(base))
+      spark.range(perBatch).select((col("id") + lit(base)).as("doc_id"),
+        concat_ws(" ", (0 until 24).map(j => concat(lit(s"w${j}x"), cid.cast("string"))): _*)
+          .as("text"))
+    }
+    def run(b: Int): Seq[String] = withJobs(StreamPipeline.dedupIndexBatch(
+      docsFor(b), b.toLong, "doc_id", "text", out, idx))._2
+    run(0)
+    val plain = run(1)
+    assert(IndexState.committedData(spark, idx).size == 2, "batch 1 must not compact")
+    val compacting = run(2)
+    assert(IndexState.committedData(spark, idx).size == 1, "batch 2 must compact")
+    assert(spark.read.parquet(s"$out/batch=2").count() == perBatch - nDup,
+      "the repeated docs must drop")
+    assert(plain.size <= 5,
+      s"a plain batch started ${plain.size} jobs:\n${plain.mkString("\n")}")
+    assert(compacting.size <= 6,
+      s"a compacting batch started ${compacting.size} jobs:\n${compacting.mkString("\n")}")
+  }
+
   test("splitIndexBatch: adopt/fresh sides at ingest equal the batch incremental split; replay skips") {
     import graft.operators.{CorpusPrep, Dedup}
     val out = java.nio.file.Files.createTempDirectory("graft-split-out").toString + "/out"
